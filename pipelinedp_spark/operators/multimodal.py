@@ -1527,16 +1527,14 @@ def build_phash_store(reference: DataFrame,
     every step (the `minhash_profile` pattern). When given,
     ``reference`` is ignored (any frame on the session); pass a
     checkpointed profile — it is consumed twice here."""
-    from pipelinedp_spark import store
     spark = reference.sparkSession
     if max_hamming > num_blocks - 1:
         raise ValueError(
             f"max_hamming={max_hamming} needs num_blocks >= "
             f"{max_hamming + 1} (pigeonhole recall bound)")
-    m = store.begin_build(spark, store_name, mode,
-                          ("_blocks", "_members", "_meta"),
-                          validate={"max_hamming": max_hamming,
-                                    "num_blocks": num_blocks})
+    meta = {"max_hamming": max_hamming, "num_blocks": num_blocks,
+            "num_buckets": num_buckets}
+    m = store.begin_build(spark, store_name, mode, store.PHASH, meta)
     if m is not None:
         num_buckets = int(m["num_buckets"])   # appends stay aligned
         # A pre-per-image-takedown store (built before _members
@@ -1570,27 +1568,14 @@ def build_phash_store(reference: DataFrame,
     blocks = (hp.select("ph").distinct()
               .select("ph", F.explode(_phash_blocks(
                   "ph", num_blocks)).alias("bk")))
-    members = hp.dropDuplicates(["id"])
-    # provenance stamps (see build_bm25_index): a guarded streaming
-    # append marks its rows so a crash between apply and ingest-log
-    # write rolls back convergently (only THIS batch's block/member
-    # rows are removed — a family indexed by earlier batches keeps
-    # its own stamped rows).
-    if mode != "append" or store.table_has_prov(
-            spark, f"{store_name}_blocks"):
-        rid, bid = prov if prov is not None else (None, None)
-        blocks = store.with_prov(blocks, rid, bid)
-        members = store.with_prov(members, rid, bid)
-    store.write_bucketed(blocks, f"{store_name}_blocks", "bk",
-                         num_buckets, mode)
-    store.write_bucketed(members,
-                         f"{store_name}_members", "ph", num_buckets,
-                         mode)
-    if mode != "append":
-        store.write_meta(spark, store_name,
-                         max_hamming=int(max_hamming),
-                         num_blocks=int(num_blocks),
-                         num_buckets=int(num_buckets))
+    # a crashed guarded append rolls back only THIS batch's stamped
+    # block/member rows — a family indexed by earlier batches keeps its
+    # own rows
+    store.finish_build(spark, store.PHASH, store_name, mode,
+                       {"_blocks": blocks,
+                        "_members": hp.dropDuplicates(["id"])},
+                       num_buckets, prov,
+                       meta=meta if m is None else None)
 
 
 def remove_from_phash_store(images: DataFrame,
@@ -1634,7 +1619,6 @@ def remove_from_phash_store(images: DataFrame,
     the decode+hash pass over ``images``; when given, ``images`` is
     ignored (any frame on the session). Pass a checkpointed profile —
     it feeds both bookkeeping appends."""
-    from pipelinedp_spark import store as _store
     spark = images.sparkSession
     if not spark.catalog.tableExists(f"{store_name}_members"):
         raise ValueError(
@@ -1654,12 +1638,7 @@ def remove_from_phash_store(images: DataFrame,
                   .filter(F.col("ph").isNotNull())
                   .dropDuplicates(["id"]).localCheckpoint())
     rm_table = f"{store_name}_removed_ids"
-    new_rm = hashed
-    if spark.catalog.tableExists(rm_table):
-        new_rm = new_rm.join(spark.table(rm_table), "id", "left_anti")
-    _store.write_bucketed(new_rm.localCheckpoint(), rm_table, "ph",
-                          nbuck, "append")
-    spark.catalog.refreshTable(rm_table)
+    store.append_new(spark, rm_table, hashed, "id", "ph", nbuck)
     # A requested family is dead iff it IS indexed and NO member
     # survives the full removed-ids set ("present minus survivors" —
     # never tombstone a hash the index doesn't hold, or a future
@@ -1672,14 +1651,9 @@ def remove_from_phash_store(images: DataFrame,
     survivors = (fam.join(spark.table(rm_table).select("id"), "id",
                           "left_anti")
                  .select("ph").distinct())
-    dead = fam.select("ph").distinct().join(survivors, "ph",
-                                            "left_anti")
-    ts_table = f"{store_name}_tombstones"
-    if spark.catalog.tableExists(ts_table):
-        dead = dead.join(spark.table(ts_table), "ph", "left_anti")
-    _store.write_bucketed(dead.localCheckpoint(), ts_table, "ph",
-                          nbuck, "append")
-    spark.catalog.refreshTable(ts_table)
+    store.append_tombstones(
+        spark, store.PHASH, store_name,
+        fam.select("ph").distinct().join(survivors, "ph", "left_anti"))
 
 
 def _phash_blocks(hash_col: str, num_blocks: int):
@@ -1731,14 +1705,11 @@ def incremental_phash_dedup(new_images: DataFrame,
                        F.explode(_phash_blocks("phash", num_blocks))
                        .alias("bk"))
                .repartition(nbuck, "bk"))
-    sblocks = spark.table(f"{store_name}_blocks")
     # Logical takedowns (`remove_from_phash_store`): tombstoned hashes
     # stop flagging batch images (size-guarded broadcast anti-join on
     # the bucketed scan — no exchange).
-    from pipelinedp_spark import store as _store
-    ts = _store.tombstones(spark, store_name)
-    if ts is not None:
-        sblocks = sblocks.join(ts, "ph", "left_anti")
+    sblocks = store.live_rows(spark, store.PHASH, store_name,
+                              spark.table(f"{store_name}_blocks"))
     dup_hashes = (bblocks.join(sblocks, "bk")
                   .filter(F.bit_count(F.col("__h__").bitwiseXOR(
                       F.col("ph"))) <= max_hamming)

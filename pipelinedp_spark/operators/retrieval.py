@@ -343,49 +343,48 @@ def build_bm25_index(docs: DataFrame,
     Build = the word-count shuffle paid once. Queries against a 100-TB
     corpus then cost only the postings of their terms — the serving
     shape of a real inverted index."""
-    from pipelinedp_spark import store
     spark = docs.sparkSession
-    m = store.begin_build(spark, store_name, mode,
-                          ("_postings", "_terms", "_meta"))
+    m = store.begin_build(spark, store_name, mode, store.BM25)
+    n_docs = total_dl = 0
     if m is not None:
-        prev_n = int(m["n_docs"])
-        prev_tot = (int(m["total_dl"]) if "total_dl" in m.__fields__
-                    else int(round(float(m["avgdl"]) * prev_n)))
+        n_docs, total_dl = _bm25_totals(m)
         num_buckets = int(m["num_buckets"])   # appends stay aligned
-    else:
-        prev_n = prev_tot = 0
     tf = term_frequencies(docs, text_col, id_col).localCheckpoint()
     dl = doc_lengths(tf, id_col)
-    stats = dl.agg(F.count(F.lit(1)).alias("n"),
-                   F.sum("dl").alias("tot")).collect()[0]
-    n_docs = prev_n + int(stats["n"])
-    total_dl = prev_tot + int(stats["tot"] or 0)
-    avgdl = float(total_dl) / float(n_docs) if n_docs else 0.0
+    n, tot = _doc_stats(dl)
     post = (tf.join(dl, id_col)
             .select("term", F.col(id_col).alias("id"), "tf", "dl"))
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    # provenance stamps: ``prov=(run_id, batch_id)`` marks a guarded
-    # streaming append so `store.apply_batch_once` can roll the batch
-    # back if the process dies before its ingest-log row lands —
-    # BM25's tf/df/scalars are multiplicity-critical, so this is the
-    # kind where the crash window actually corrupts. Unguarded builds
-    # stamp NULLs; appends to a pre-r12 table (no stamp columns) stay
-    # stamp-free and keep the documented window.
-    if mode != "append" or store.table_has_prov(
-            spark, f"{store_name}_postings"):
-        rid, bid = prov if prov is not None else (None, None)
-        post = store.with_prov(post, rid, bid)
-        dft = store.with_prov(dft, rid, bid)
-    store.write_bucketed(post, f"{store_name}_postings", "term",
-                         num_buckets, mode)
-    store.write_bucketed(dft, f"{store_name}_terms", "term",
-                         num_buckets, mode)
-    store.write_meta(spark, store_name, n_docs=int(n_docs),
-                     total_dl=int(total_dl), avgdl=float(avgdl),
-                     num_buckets=int(num_buckets))
-    if mode == "append":
-        store.refresh_store(spark, store_name,
-                            ("_postings", "_terms", "_meta"))
+    # provenance stamps matter most here: BM25's tf/df/scalars are
+    # multiplicity-critical, so this is the kind where the crash
+    # window between apply and ingest-log write actually corrupts.
+    store.finish_build(spark, store.BM25, store_name, mode,
+                       {"_postings": post, "_terms": dft}, num_buckets,
+                       prov, meta=_bm25_meta(n_docs + n, total_dl + tot,
+                                             num_buckets))
+
+
+def _bm25_totals(m) -> tuple[int, int]:
+    """(n_docs, total_dl) of a meta row; metas predating ``total_dl``
+    recover it from avgdl."""
+    n = int(m["n_docs"])
+    return n, (int(m["total_dl"]) if "total_dl" in m.__fields__
+               else int(round(float(m["avgdl"]) * n)))
+
+
+def _doc_stats(docs: DataFrame) -> tuple[int, int]:
+    """(row count, summed ``dl``) of a one-row-per-doc frame."""
+    r = docs.agg(F.count(F.lit(1)).alias("n"),
+                 F.sum("dl").alias("tot")).collect()[0]
+    return int(r["n"]), int(r["tot"] or 0)
+
+
+def _bm25_meta(n_docs: int, total_dl: int, num_buckets: int) -> dict:
+    """The BM25 meta row: exact integer totals, so every path derives
+    avgdl with the same arithmetic a from-scratch build uses."""
+    return {"n_docs": int(n_docs), "total_dl": int(total_dl),
+            "avgdl": float(total_dl) / float(n_docs) if n_docs else 0.0,
+            "num_buckets": int(num_buckets)}
 
 
 def bm25_topk_from_index(queries: DataFrame,
@@ -416,16 +415,13 @@ def bm25_topk_from_index(queries: DataFrame,
     spark = queries.sparkSession
     m = store.read_meta(spark, store_name)
     n_docs, avgdl = int(m["n_docs"]), float(m["avgdl"])
-    post = spark.table(f"{store_name}_postings")
     # Logical takedowns (`remove_from_bm25_index`): tombstoned docs'
     # postings drop via an anti-join (broadcast while the tombstone
     # table is small — the guarded hint lives in store.tombstones);
     # their df/scalar corrections already live in the terms segments
     # and meta.
-    from pipelinedp_spark import store as _store
-    ts = _store.tombstones(spark, store_name)
-    if ts is not None:
-        post = post.join(ts, "id", "left_anti")
+    post = store.live_rows(spark, store.BM25, store_name,
+                           spark.table(f"{store_name}_postings"))
     qterms = (queries.select(
         F.col(query_id),
         F.explode(F.array_distinct(T.tokens(F.col(query_text))))
@@ -513,45 +509,35 @@ def remove_from_bm25_index(doc_ids: DataFrame,
     clears the tombstone table. Re-ADDING a removed id requires that
     compaction first — while its tombstone stands, the reader's
     anti-join would hide the re-appended postings too."""
-    from pipelinedp_spark import store
     spark = doc_ids.sparkSession
     m = store.read_meta(spark, store_name)
     nbuck = int(m["num_buckets"])
-    ids = doc_ids.select(F.col(id_col).alias("id")).distinct()
-    ts_table = f"{store_name}_tombstones"
-    if spark.catalog.tableExists(ts_table):
-        ids = ids.join(spark.table(ts_table), "id", "left_anti")
-    ids = ids.localCheckpoint()
-    removed = (spark.table(f"{store_name}_postings")
-               .join(F.broadcast(ids), "id").localCheckpoint())
-    stats = (removed.select("id", "dl").distinct()
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.sum("dl").alias("tot")).collect()[0])
     # The three writes below are not atomic. Tombstones go FIRST so
     # every intermediate state is conservative: once they land, readers
     # already hide the removed docs' postings (the takedown is honored
     # immediately); a crash before the df-segment / meta corrections
     # leaves served idf slightly understated (df still counts hidden
     # docs) — never a resurrected document. Recovery from that window
-    # is a rebuild or `compact_store` (NOT a re-run: the idempotency
-    # anti-join above sees the tombstones and skips the corrections),
-    # the same one-batch crash contract `append_bm25_batch_idempotent`
-    # documents for ingest.
-    store.write_bucketed(ids, ts_table, "id", nbuck, "append")
+    # is a rebuild or `compact_store` (NOT a re-run: the tombstone
+    # writer's idempotency anti-join skips the already-tombstoned ids,
+    # so their corrections are never recomputed), the same one-batch
+    # crash contract `append_bm25_batch_idempotent` documents for
+    # ingest.
+    ids = store.append_tombstones(
+        spark, store.BM25, store_name,
+        doc_ids.select(F.col(id_col).alias("id")).distinct())
+    removed = (spark.table(f"{store_name}_postings")
+               .join(F.broadcast(ids), "id").localCheckpoint())
+    n, tot = _doc_stats(removed.select("id", "dl").distinct())
     neg = (removed.groupBy("term")
            .agg((-F.count(F.lit(1))).alias("df")))
     if store.table_has_prov(spark, f"{store_name}_terms"):
         neg = store.with_prov(neg)   # takedowns are not batch-guarded
     store.write_bucketed(neg, f"{store_name}_terms", "term", nbuck,
                          "append")
-    prev_tot = (int(m["total_dl"]) if "total_dl" in m.__fields__
-                else int(round(float(m["avgdl"]) * int(m["n_docs"]))))
-    n_docs = int(m["n_docs"]) - int(stats["n"])
-    total_dl = prev_tot - int(stats["tot"] or 0)
-    avgdl = float(total_dl) / float(n_docs) if n_docs else 0.0
-    store.write_meta(spark, store_name, n_docs=n_docs,
-                     total_dl=total_dl, avgdl=float(avgdl),
-                     num_buckets=nbuck)
+    n_docs, total_dl = _bm25_totals(m)
+    store.write_meta(spark, store_name,
+                     **_bm25_meta(n_docs - n, total_dl - tot, nbuck))
     store.refresh_store(spark, store_name,
                         ("_postings", "_terms", "_meta", "_tombstones"))
 
@@ -569,19 +555,9 @@ def restore_bm25_meta(spark, store_name: str) -> None:
     back in sync with the cleaned tables; and by `compact_store`,
     whose physical rewrite re-derives terms and meta from the
     surviving postings."""
-    from pipelinedp_spark import store
-    m = store.read_meta(spark, store_name)
-    post = spark.table(f"{store_name}_postings")
-    ts = store.tombstones(spark, store_name)
-    if ts is not None:
-        post = post.join(ts, "id", "left_anti")
-    stats = (post.select("id", "dl").distinct()
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.sum("dl").alias("tot")).collect()[0])
-    n_docs = int(stats["n"])
-    total_dl = int(stats["tot"] or 0)
-    avgdl = float(total_dl) / float(n_docs) if n_docs else 0.0
-    store.write_meta(spark, store_name, n_docs=n_docs,
-                     total_dl=total_dl, avgdl=float(avgdl),
-                     num_buckets=int(m["num_buckets"]))
-    spark.catalog.refreshTable(f"{store_name}_meta")
+    post = store.live_rows(spark, store.BM25, store_name,
+                           spark.table(f"{store_name}_postings"))
+    n, tot = _doc_stats(post.select("id", "dl").distinct())
+    store.write_meta(spark, store_name, **_bm25_meta(
+        n, tot, int(store.read_meta(spark, store_name)["num_buckets"])))
+    store.refresh_table(spark, f"{store_name}_meta")

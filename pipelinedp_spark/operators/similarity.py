@@ -741,11 +741,8 @@ def build_ann_index(corpus: DataFrame,
     the PERSISTED models are loaded and reused (training is skipped —
     retraining would silently re-shard the existing codes), and the
     new codes land in their cell partitions."""
-    from pipelinedp_spark import store
     spark = corpus.sparkSession
-    meta = store.begin_build(
-        spark, store_name, mode,
-        ("_codes", "_centroids", "_codebooks", "_meta"))
+    meta = store.begin_build(spark, store_name, mode, store.ANN)
     if meta is not None:
         m_, ksub_, sub = (int(meta["m"]), int(meta["ksub"]),
                           int(meta["subdim"]))
@@ -795,38 +792,31 @@ def build_ann_index(corpus: DataFrame,
         F.col(corpus_id).alias("id"),
         _cell(F.col(corpus_vec)).alias("cell"),
         _encode(F.col(corpus_vec)).alias("codes"))
-    # provenance stamps (see build_bm25_index): a guarded streaming
-    # append marks its code rows so a crash between apply and
-    # ingest-log write rolls back convergently — a half-applied
-    # batch's duplicate ids would otherwise eat top-k slots until
-    # compaction.
-    if mode != "append" or store.table_has_prov(
-            spark, f"{store_name}_codes"):
-        rid, bid = prov if prov is not None else (None, None)
-        coded = store.with_prov(coded, rid, bid)
-    (coded.write.mode(mode).format("parquet")
-     .partitionBy("cell").saveAsTable(f"{store_name}_codes"))
-    if mode == "append":
-        return
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in cts[i]]) for i in range(len(cts))],
-        "cell int, cv array<double>") \
-        .write.mode("overwrite").format("parquet") \
-        .saveAsTable(f"{store_name}_centroids")
-    spark.createDataFrame(
-        [(int(j), int(i), [float(x) for x in cb[j, i]])
-         for j in range(m_) for i in range(ksub_)],
-        "sub int, idx int, c array<double>") \
-        .write.mode("overwrite").format("parquet") \
-        .saveAsTable(f"{store_name}_codebooks")
+    if meta is None:
+        spark.createDataFrame(
+            [(int(i), [float(x) for x in cts[i]])
+             for i in range(len(cts))],
+            "cell int, cv array<double>") \
+            .write.mode("overwrite").format("parquet") \
+            .saveAsTable(f"{store_name}_centroids")
+        spark.createDataFrame(
+            [(int(j), int(i), [float(x) for x in cb[j, i]])
+             for j in range(m_) for i in range(ksub_)],
+            "sub int, idx int, c array<double>") \
+            .write.mode("overwrite").format("parquet") \
+            .saveAsTable(f"{store_name}_codebooks")
+    # A crashed guarded append's stamped code rows roll back — its
+    # duplicate ids would otherwise eat top-k slots until compaction.
     # ts_num_buckets: bucket count for the (id-keyed) tombstone table
-    # only — the codes table itself is cell-PARTITIONED, not bucketed,
-    # so unlike the other store kinds this knob doesn't describe the
-    # index layout; it's persisted so takedowns across sessions append
-    # bucket-aligned instead of hardcoding a constant.
-    store.write_meta(spark, store_name, num_cells=int(len(cts)),
-                     m=int(m_), ksub=int(ksub_), subdim=int(sub),
-                     ts_num_buckets=4)
+    # only — the codes table itself is cell-PARTITIONED, not bucketed;
+    # it's persisted so takedowns across sessions append bucket-aligned
+    # instead of hardcoding a constant.
+    store.finish_build(spark, store.ANN, store_name, mode,
+                       {"_codes": coded}, None, prov,
+                       meta=None if meta is not None else {
+                           "num_cells": int(len(cts)), "m": int(m_),
+                           "ksub": int(ksub_), "subdim": int(sub),
+                           "ts_num_buckets": 4})
 
 
 def ann_search_from_index(queries: DataFrame,
@@ -890,16 +880,13 @@ def ann_search_from_index(queries: DataFrame,
          .localCheckpoint())
     probe = sorted({r["cell"] for r in q.select("cell")
                     .distinct().collect()})
-    codes = spark.table(f"{store_name}_codes") \
-        .filter(F.col("cell").isin(probe))
     # Logical takedowns (`remove_from_ann_index`): tombstoned vectors
     # drop via an anti-join on the already-pruned scan (broadcast only
     # while the tombstone table is small — store.tombstones guards the
     # hint); compact_store('ann') applies them physically.
-    from pipelinedp_spark import store as _store
-    ts = _store.tombstones(spark, store_name)
-    if ts is not None:
-        codes = codes.join(ts, "id", "left_anti")
+    codes = store.live_rows(spark, store.ANN, store_name,
+                            spark.table(f"{store_name}_codes")
+                            .filter(F.col("cell").isin(probe)))
     scored = codes.join(F.broadcast(q), "cell").select(
         F.col(query_id), F.col("id").alias(corpus_id),
         _adc(F.col("codes"), F.col(query_vec)).alias("adist"))
@@ -924,18 +911,6 @@ def remove_from_ann_index(vec_ids: DataFrame,
     applies tombstones physically (rewrites the codes table without
     them, cell partitioning preserved) and clears the table. Re-adding
     a removed id requires that compaction first."""
-    from pipelinedp_spark import store as _store
-    spark = vec_ids.sparkSession
-    m = store.read_meta(spark, store_name)
-    # Pre-ts_num_buckets metas fall back to the old constant 4 (the
-    # tombstone join is a guarded broadcast anti-join, so the bucket
-    # count is about append alignment, not join co-location).
-    nbuck = (int(m["ts_num_buckets"])
-             if "ts_num_buckets" in m.__fields__ else 4)
-    ids = vec_ids.select(F.col(corpus_id).alias("id")).distinct()
-    ts_table = f"{store_name}_tombstones"
-    if spark.catalog.tableExists(ts_table):
-        ids = ids.join(spark.table(ts_table), "id", "left_anti")
-    _store.write_bucketed(ids.localCheckpoint(), ts_table, "id", nbuck,
-                          "append")
-    spark.catalog.refreshTable(ts_table)
+    store.append_tombstones(vec_ids.sparkSession, store.ANN, store_name,
+                            vec_ids.select(F.col(corpus_id).alias("id"))
+                            .distinct())

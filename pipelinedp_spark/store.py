@@ -1,4 +1,4 @@
-"""Shared plumbing for the persisted-index ("store") family.
+"""The persisted-index ("store") lifecycle, written once for six kinds.
 
 Six store kinds — exact fingerprints, MinHash bands, span anchors,
 image pHash blocks (`operators.dedup`, `operators.multimodal`), the
@@ -7,21 +7,35 @@ index (`operators.similarity`) — follow one contract: build the
 expensive artifact ONCE into bucketed/partitioned managed tables, keep
 the knobs in a one-row ``{store}_meta`` table so later batches can
 never silently fingerprint differently, append increments
-bucket-aligned, and refresh relation caches after an append (a cached
-pre-append scan otherwise serves stale files — found once on the exact
-store, pinned in tests, and a copy-adjacent hazard in every builder).
+bucket-aligned, take content down with a reader-side tombstone
+anti-join, ingest micro-batches exactly once, and compact.
 
-This module centralizes that plumbing; the per-store algorithms stay
-in their operator modules. Reference repo (OpenMined/PipelineDP) has
-no counterpart — the store family is net-new LLM-pipeline
-infrastructure.
+Each kind is one frozen `StoreKind` record that declares only what
+differs: its tables (`StoreTable` — the suffix, the layout, a bucket
+column or ``("partition", col)``, and the compaction dedup key), its
+tombstone key, the meta knobs an append must match, and a few hooks
+(the MinHash global bucket cap and pHash member survivorship at
+compaction, the BM25 terms re-derivation and meta restore). The
+lifecycle is written once against the record: `begin_build` /
+`finish_build` (drop or validate, then provenance stamps, one write
+per table in its layout, the meta row), `live_rows` (the reader-side
+tombstone anti-join), `append_tombstones`, `ingest_once` (refresh,
+then the exactly-once guard `apply_batch_once` with the kind's
+stamped tables and restore hook) and `compact_store`. The kind
+algorithms — fingerprinting, candidate/verify joins, IVF-PQ training,
+BM25 scoring — stay in their operator modules. Reference repo
+(OpenMined/PipelineDP) has no counterpart — the store family is
+net-new LLM-pipeline infrastructure.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def _managed_location(spark, name: str) -> str | None:
@@ -73,9 +87,12 @@ def drop_store_table(spark, name: str) -> None:
 
 
 def begin_build(spark, store_name: str, mode: str,
-                suffixes: tuple[str, ...],
+                kind: "StoreKind | tuple[str, ...]",
                 validate: dict[str, int] | None = None):
-    """The build/append preamble every store builder repeats.
+    """The build/append preamble of every store builder. ``kind`` is
+    the builder's `StoreKind` — its tables are the suffixes, and only
+    its declared ``knobs`` of ``validate`` are checked — or a bare
+    tuple of suffixes (then every ``validate`` knob is checked).
 
     ``mode='overwrite'``: drop each ``{store}{suffix}`` table (plus
     orphaned locations) AND the store's bookkeeping tables —
@@ -91,6 +108,10 @@ def begin_build(spark, store_name: str, mode: str,
     fingerprint exactly like the store), and return the meta Row so
     the caller can inherit stored values (num_buckets, scalars,
     model shapes)."""
+    suffixes = kind
+    if isinstance(kind, StoreKind):
+        suffixes = kind.suffixes
+        validate = {k: validate[k] for k in kind.knobs} if validate else None
     if mode == "append":
         m = read_meta(spark, store_name)
         # A knob MISSING from the meta row is a mismatch, not a skip:
@@ -129,9 +150,13 @@ def _shuffle_free_partitions(df: DataFrame) -> int | None:
     (an earlier revision inspected executedPlan()) costs hundreds of
     ms on the deep build/append plans that would keep the repartition
     anyway, and ``df.rdd.getNumPartitions()`` on a plan with exchanges
-    would under AQE even materialize its stages."""
+    would under AQE even materialize its stages. Projections over the
+    checkpoint (a provenance stamp, a column pick) keep its
+    partitioning and are looked through."""
     try:
         jplan = df._jdf.queryExecution().logical()
+        while jplan.getClass().getSimpleName() == "Project":
+            jplan = jplan.child()
         if jplan.getClass().getSimpleName() != "LogicalRDD":
             return None
         return df.rdd.getNumPartitions()
@@ -257,7 +282,6 @@ def with_prov(df: DataFrame, run_id: str | None = None,
     back a HALF-APPLIED batch (crash between apply and ingest-log
     write) before re-applying — the convergent-recovery protocol that
     closes the one-batch double-apply window."""
-    from pyspark.sql import functions as F
     return (df.withColumn(PROV_RUN, F.lit(run_id).cast("string"))
             .withColumn(PROV_BATCH, F.lit(
                 None if batch_id is None else int(batch_id))
@@ -273,9 +297,31 @@ def table_has_prov(spark, table: str) -> bool:
 
 
 def _prov_match(rid: str, batch_id: int):
-    from pyspark.sql import functions as F
     return (F.col(PROV_RUN).eqNullSafe(rid)
             & F.col(PROV_BATCH).eqNullSafe(int(batch_id)))
+
+
+def _parquet_files(loc: str):
+    """The live parquet files under a table location, skipping
+    in-flight/hidden paths (``_temporary``, dotfiles) the way Spark's
+    own file listing does: a crashed write's leftovers are invisible
+    to every scan, so they must not count here either."""
+    for root, dirs, files in os.walk(loc):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for fn in files:
+            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+                yield os.path.join(root, fn)
+
+
+def _remove_files(paths) -> None:
+    """Delete parquet files together with their Hadoop ``.crc``
+    sidecars."""
+    for p in paths:
+        os.remove(p)
+        crc = os.path.join(os.path.dirname(p),
+                           "." + os.path.basename(p) + ".crc")
+        if os.path.exists(crc):
+            os.remove(crc)
 
 
 def _batch_files(spark, table: str, rid: str, batch_id: int):
@@ -301,52 +347,41 @@ def _batch_files(spark, table: str, rid: str, batch_id: int):
         return None
     target_b = int(batch_id)
     hits = []
-    for root, dirs, files in os.walk(loc):
-        # skip in-flight/hidden paths (matching Spark's listing filter):
-        # a _temporary leftover is invisible to the scan being rolled
-        # back, so classifying it would only force the rewrite fallback
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for fn in files:
-            if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
-                continue
-            path = os.path.join(root, fn)
-            try:
-                md = pq.read_metadata(path)
-            except Exception:
+    for path in _parquet_files(loc):
+        try:
+            md = pq.read_metadata(path)
+        except Exception:
+            return None
+        names = [md.schema.column(i).path for i in range(len(md.schema))]
+        try:
+            ri, bi = names.index(PROV_RUN), names.index(PROV_BATCH)
+        except ValueError:
+            return None     # pre-r12 file without stamp columns
+        verdicts = set()
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            rs, bs = rg.column(ri).statistics, rg.column(bi).statistics
+            if rs is None or bs is None:
                 return None
-            names = [md.schema.column(i).path
-                     for i in range(len(md.schema))]
-            try:
-                ri, bi = names.index(PROV_RUN), names.index(PROV_BATCH)
-            except ValueError:
-                return None     # pre-r12 file without stamp columns
-            verdicts = set()
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                rs, bs = rg.column(ri).statistics, \
-                    rg.column(bi).statistics
-                if rs is None or bs is None:
-                    return None
-                n = rg.num_rows
-                if rs.null_count == n and bs.null_count == n:
-                    verdicts.add("none")      # unguarded build rows
-                    continue
-                if (not rs.has_min_max or not bs.has_min_max
-                        or rs.null_count or bs.null_count):
-                    return None
-                rmin = rs.min.decode() if isinstance(rs.min, bytes) \
-                    else rs.min
-                rmax = rs.max.decode() if isinstance(rs.max, bytes) \
-                    else rs.max
-                if rmin != rmax or bs.min != bs.max:
-                    return None   # mixed stamps (e.g. compacted file)
-                verdicts.add("all" if (rmin == rid
-                                       and int(bs.min) == target_b)
-                             else "none")
-            if verdicts == {"all"}:
-                hits.append(path)
-            elif verdicts != {"none"}:
-                return None       # some groups match, some don't
+            n = rg.num_rows
+            if rs.null_count == n and bs.null_count == n:
+                verdicts.add("none")      # unguarded build rows
+                continue
+            if (not rs.has_min_max or not bs.has_min_max
+                    or rs.null_count or bs.null_count):
+                return None
+            rmin = rs.min.decode() if isinstance(rs.min, bytes) \
+                else rs.min
+            rmax = rs.max.decode() if isinstance(rs.max, bytes) \
+                else rs.max
+            if rmin != rmax or bs.min != bs.max:
+                return None   # mixed stamps (e.g. compacted file)
+            verdicts.add("all" if (rmin == rid and int(bs.min) == target_b)
+                         else "none")
+        if verdicts == {"all"}:
+            hits.append(path)
+        elif verdicts != {"none"}:
+            return None       # some groups match, some don't
     return hits
 
 
@@ -364,8 +399,6 @@ def _clean_half_applied(spark, store_name: str, rid: str,
     cell-partitioned ANN codes table. Tables without provenance
     columns (pre-r12 builds) are skipped — they keep the documented
     one-batch window."""
-    from pyspark.sql import functions as F
-    meta = None
     found = False
     for suffix, layout in stamped.items():
         t = store_name + suffix
@@ -385,12 +418,7 @@ def _clean_half_applied(spark, store_name: str, rid: str,
             if not files:
                 continue
             found = True
-            for p in files:
-                os.remove(p)
-                crc = os.path.join(os.path.dirname(p),
-                                   "." + os.path.basename(p) + ".crc")
-                if os.path.exists(crc):
-                    os.remove(crc)
+            _remove_files(files)
             refresh_table(spark, t)
             continue
         refresh_table(spark, t)
@@ -401,15 +429,9 @@ def _clean_half_applied(spark, store_name: str, rid: str,
         if not df.filter(cond).limit(1).count():
             continue
         found = True
-        keep = df.filter(~cond).localCheckpoint()
-        if isinstance(layout, tuple) and layout[0] == "partition":
-            (keep.write.mode("overwrite").format("parquet")
-             .partitionBy(layout[1]).saveAsTable(t))
-        else:
-            if meta is None:
-                meta = spark.table(f"{store_name}_meta").collect()[0]
-            write_bucketed(keep, t, layout,
-                           int(meta["num_buckets"]), "overwrite")
+        write_table(df.filter(~cond).localCheckpoint(), t, layout,
+                    _num_buckets(read_meta(spark, store_name)),
+                    "overwrite")
         refresh_table(spark, t)
     return found
 
@@ -425,7 +447,6 @@ def orphan_provs(spark, store_name: str,
     crashed stream's checkpoint never committed the batch, so on
     resume Structured Streaming replays it and the guard applies it
     fresh."""
-    from pyspark.sql import functions as F
     provs = None
     for t in tables:
         if not table_has_prov(spark, t):
@@ -460,7 +481,6 @@ def orphan_provs(spark, store_name: str,
 def anti_orphans(df: DataFrame, orphans: "DataFrame | None"):
     """Drop rows stamped with an orphaned (run,batch) pair; rows with
     NULL stamps (unguarded builds) always survive."""
-    from pyspark.sql import functions as F
     if orphans is None or PROV_RUN not in df.columns:
         return df
     o = orphans.select(F.col(PROV_RUN).alias("__or"),
@@ -594,12 +614,7 @@ def compact_ingest_log(spark, store_name: str) -> None:
                if f.endswith(".parquet")]
         (folded.write.mode("append").format("parquet")
          .saveAsTable(log_table))
-        for p in old:
-            os.remove(p)
-            crc = os.path.join(os.path.dirname(p),
-                               "." + os.path.basename(p) + ".crc")
-            if os.path.exists(crc):
-                os.remove(crc)
+        _remove_files(old)
     else:
         (folded.write.mode("overwrite").format("parquet")
          .saveAsTable(log_table))
@@ -656,7 +671,6 @@ def apply_batch_once(spark, store_name: str, batch_id: int,
     interval [batch_id, coalesce(hi, batch_id)] so `compact_ingest_log`
     can fold a long stream's one-row-per-batch history to one range
     row per lineage without losing replay suppression."""
-    from pyspark.sql import functions as F
     log_table = f"{store_name}_ingest_log"
     rid = str(run_id or "")
     b = int(batch_id)
@@ -692,41 +706,33 @@ def apply_batch_once(spark, store_name: str, batch_id: int,
         # files directly with pyarrow (~3 ms) and probe in Python —
         # the files ARE the truth the Spark scan would read.
         log_rows = _read_log_rows(spark, log_table)
-        if log_rows is not None:
+        if log_rows is None:
+            log = spark.table(log_table)
+            cols = set(log.columns)
+        else:
             cols, rows = log_rows
-            legacy = "run_id" not in cols
-            has_hi = "hi" in cols
-            if legacy and rid:
-                raise ValueError(
-                    f"store {store_name}'s ingest log predates run-id "
-                    f"namespacing (batch-id-only rows); rebuild the "
-                    f"store (mode='overwrite' resets the log) before "
-                    f"streaming into it with a checkpoint lineage")
+        legacy = "run_id" not in cols
+        has_hi = "hi" in cols
+        if legacy and rid:
+            # A batch-only log cannot say WHICH lineage its ids belong
+            # to: matching on batch_id alone would silently drop a NEW
+            # stream's first batches as "replays" of the old one, and
+            # ignoring the log would double-apply a RESUMED old
+            # stream's replays. Neither silent outcome is acceptable —
+            # fail loudly with the remedy (same contract as
+            # begin_build's missing-knob check).
+            raise ValueError(
+                f"store {store_name}'s ingest log predates run-id "
+                f"namespacing (batch-id-only rows); rebuild the "
+                f"store (mode='overwrite' resets the log) before "
+                f"streaming into it with a checkpoint lineage")
+        if log_rows is not None:
             for r in rows:
-                lo = r["batch_id"]
-                hi_v = r.get("hi")
-                if hi_v is None:
-                    hi_v = lo
-                if (lo <= b <= hi_v
+                lo, hi_v = r["batch_id"], r.get("hi")
+                if (lo <= b <= (lo if hi_v is None else hi_v)
                         and (legacy or r.get("run_id") == rid)):
                     return False
         else:
-            log = spark.table(log_table)
-            legacy = "run_id" not in log.columns
-            has_hi = "hi" in log.columns
-            if legacy and rid:
-                # A batch-only log cannot say WHICH lineage its ids
-                # belong to: matching on batch_id alone would silently
-                # drop a NEW stream's first batches as "replays" of the
-                # old one, and ignoring the log would double-apply a
-                # RESUMED old stream's replays. Neither silent outcome
-                # is acceptable — fail loudly with the remedy (same
-                # contract as begin_build's missing-knob check).
-                raise ValueError(
-                    f"store {store_name}'s ingest log predates run-id "
-                    f"namespacing (batch-id-only rows); rebuild the "
-                    f"store (mode='overwrite' resets the log) before "
-                    f"streaming into it with a checkpoint lineage")
             hi = (F.coalesce(F.col("hi"), F.col("batch_id")) if has_hi
                   else F.col("batch_id"))
             done = log.filter((F.col("batch_id") <= b) & (hi >= b))
@@ -818,7 +824,6 @@ def tombstones(spark, store_name: str,
     so the fallback branch is testable — the oracle gate runs at a
     scale where 2M would otherwise never trip — and tunable per
     deployment without threading a parameter through every reader."""
-    from pyspark.sql import functions as F
     if broadcast_rows is None:
         broadcast_rows = int(spark.conf.get(
             "spark.pipelinedp.store.tombstoneBroadcastRows",
@@ -854,21 +859,11 @@ def _file_row_count(spark, table: str) -> int | None:
         import pyarrow.parquet as pq
     except ImportError:
         return None
-    n = 0
     try:
-        for root, dirs, files in os.walk(loc):
-            # skip in-flight/hidden paths (_temporary, dotfiles) the
-            # way Spark's own file listing does — a crashed write's
-            # leftovers must not inflate the gate decision
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for fn in files:
-                if fn.endswith(".parquet") and \
-                        not fn.startswith(("_", ".")):
-                    n += pq.read_metadata(
-                        os.path.join(root, fn)).num_rows
+        return sum(pq.read_metadata(p).num_rows
+                   for p in _parquet_files(loc))
     except Exception:
         return None
-    return n
 
 
 def refresh_table(spark, table: str) -> None:
@@ -910,6 +905,285 @@ def refresh_store(spark, store_name: str,
                   suffixes: tuple[str, ...]) -> None:
     """Invalidate relation caches after an append: a table read before
     the append stays cached at its old file list in this session and
-    would silently miss the new increment."""
+    would silently miss the new increment. Tables that don't exist
+    (no takedown yet, a store predating a table) are skipped."""
     for suffix in suffixes:
-        refresh_table(spark, store_name + suffix)
+        if spark.catalog.tableExists(store_name + suffix):
+            refresh_table(spark, store_name + suffix)
+
+
+def write_table(df: DataFrame, table: str, layout, num_buckets,
+                mode: str) -> None:
+    """Write a store table in its declared layout: a bucket column
+    (`write_bucketed`) or ``("partition", col)``."""
+    if isinstance(layout, tuple):
+        (df.write.mode(mode).format("parquet")
+         .partitionBy(layout[1]).saveAsTable(table))
+    else:
+        write_bucketed(df, table, layout, num_buckets, mode)
+
+
+def _num_buckets(meta) -> int | None:
+    return (int(meta["num_buckets"]) if "num_buckets" in meta.__fields__
+            else None)
+
+
+# ---------------------------------------------------------------------------
+# Store kinds: what differs per kind is declared here; the lifecycle
+# below is written once against the declaration.
+
+@dataclass(frozen=True)
+class StoreTable:
+    """One provenance-stamped, compacted table ``{store}{suffix}`` of a
+    kind. ``layout`` is its bucket column (bucketed AND sorted by it)
+    or ``("partition", col)``. `compact_store` deduplicates it on
+    ``dedup`` (None: whole rows) and then runs the optional hook
+    ``compact(spark, store_name, meta, df, done) -> df``, where
+    ``done`` holds the kind's already-compacted frames by suffix."""
+    suffix: str
+    layout: "str | tuple[str, str]"
+    dedup: tuple[str, ...] | None = None
+    compact: Callable | None = None
+
+
+@dataclass(frozen=True)
+class StoreKind:
+    """One store kind: its stamped ``tables`` (the first decides
+    whether a store carries provenance stamps), the ``ts_key``
+    column its tombstones hold, the meta ``knobs`` an append must
+    match, ``aux`` tables dropped with a rebuild but never stamped or
+    compacted (the ANN quantizer models), the meta knob holding the
+    tombstone table's bucket count, and ``restore(spark, store_name)``
+    which re-derives meta state after a rollback or compaction."""
+    name: str
+    tables: tuple[StoreTable, ...]
+    ts_key: str
+    knobs: tuple[str, ...] = ()
+    aux: tuple[str, ...] = ()
+    ts_buckets: str = "num_buckets"
+    restore: Callable | None = None
+
+    @property
+    def suffixes(self) -> tuple[str, ...]:
+        return (*(t.suffix for t in self.tables), *self.aux, "_meta")
+
+
+def cap_buckets(bands: DataFrame, cap: int) -> DataFrame:
+    """Drop every MinHash band bucket holding more than ``cap`` rows —
+    a bucket with B ids makes B^2/2 candidate pairs."""
+    keep = (bands.groupBy("bh").agg(F.count(F.lit(1)).alias("__n__"))
+            .filter(F.col("__n__") <= cap)
+            .select("bh").hint("shuffle_hash"))
+    return bands.join(keep, "bh").select(*bands.columns)
+
+
+def _minhash_global_cap(spark, store_name, meta, bands, done):
+    # Re-apply the build-time cap GLOBALLY: a bucket that grew past it
+    # across per-increment-capped appends would blow up the candidate
+    # join — exactly what the cap exists to stop.
+    if "max_bucket_size" not in meta.__fields__:
+        return bands
+    return cap_buckets(bands, int(meta["max_bucket_size"]))
+
+
+def _phash_member_survivors(spark, store_name, meta, members, done):
+    # per-image takedowns: members lose the removed ids; the
+    # removed-ids log clears with compaction, after which the members
+    # table IS the survivor set again
+    rm_table = f"{store_name}_removed_ids"
+    if not spark.catalog.tableExists(rm_table):
+        return members
+    return members.join(F.broadcast(spark.table(rm_table).select("id")),
+                        "id", "left_anti")
+
+
+def _bm25_terms_from_postings(spark, store_name, meta, terms, done):
+    # one df row per term from the compacted postings: the negative
+    # removal segments existed only to correct for tombstoned docs,
+    # which are now physically gone
+    post = done["_postings"]
+    dft = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return with_prov(dft) if PROV_RUN in post.columns else dft
+
+
+def _bm25_restore(spark, store_name: str) -> None:
+    from pipelinedp_spark.operators.retrieval import restore_bm25_meta
+    restore_bm25_meta(spark, store_name)
+
+
+EXACT = StoreKind("exact", (StoreTable("_fps", "fingerprint"),),
+                  ts_key="fingerprint")
+MINHASH = StoreKind(
+    "minhash", (StoreTable("_bands", "bh", compact=_minhash_global_cap),
+                StoreTable("_shingles", "id", ("id",))),
+    ts_key="id", knobs=("k", "num_hashes", "rows_per_band"))
+SPAN = StoreKind("span", (StoreTable("_anchors", "ah"),
+                          StoreTable("_texts", "id", ("id",))),
+                 ts_key="id", knobs=("min_len", "seed_len"))
+PHASH = StoreKind(
+    "phash", (StoreTable("_blocks", "bk"),
+              StoreTable("_members", "ph", ("id",),
+                         _phash_member_survivors)),
+    ts_key="ph", knobs=("max_hamming", "num_blocks"))
+# The codes table is cell-PARTITIONED (IVF probes prune to nprobe
+# cells), so its tombstones bucket by a knob of their own.
+ANN = StoreKind("ann", (StoreTable("_codes", ("partition", "cell"),
+                                   ("id",)),),
+                ts_key="id", aux=("_centroids", "_codebooks"),
+                ts_buckets="ts_num_buckets")
+# Postings are the PRIMARY table: compaction re-derives the terms
+# table and the meta scalars from them — a full repair of any partial
+# state (half-applied batches, the takedown's non-atomic window).
+BM25 = StoreKind(
+    "bm25", (StoreTable("_postings", "term", ("term", "id")),
+             StoreTable("_terms", "term",
+                        compact=_bm25_terms_from_postings)),
+    ts_key="id", restore=_bm25_restore)
+KINDS = {k.name: k for k in (EXACT, MINHASH, SPAN, PHASH, ANN, BM25)}
+
+
+def finish_build(spark, kind: StoreKind, store_name: str, mode: str,
+                 frames: dict, num_buckets: int | None,
+                 prov: tuple[str, int] | None = None,
+                 meta: dict | None = None) -> None:
+    """The build tail of every builder: stamp each table's frame with
+    its provenance (NULLs for unguarded builds; ``prov=(run_id,
+    batch_id)`` for a guarded append, so `apply_batch_once` can roll a
+    half-applied batch back; appends to a pre-r12 stamp-free store stay
+    stamp-free), write ``frames[suffix]`` per table in its declared
+    layout, then the ``meta`` row when given, and after an append
+    refresh the relation caches."""
+    if mode != "append" or table_has_prov(
+            spark, store_name + kind.tables[0].suffix):
+        rid, bid = prov if prov is not None else (None, None)
+        frames = {k: with_prov(df, rid, bid) for k, df in frames.items()}
+    for t in kind.tables:
+        write_table(frames[t.suffix], store_name + t.suffix, t.layout,
+                    num_buckets, mode)
+    if meta is not None:
+        write_meta(spark, store_name, **meta)
+    if mode == "append":
+        refresh_store(spark, store_name, kind.suffixes)
+
+
+def live_rows(spark, kind: StoreKind, store_name: str,
+              df: DataFrame) -> DataFrame:
+    """``df`` (a scan of one of the store's tables) without its
+    tombstoned rows: the reader-side anti-join on the kind's tombstone
+    key, broadcast while the tombstone table is small (`tombstones`).
+    Compaction applies tombstones physically."""
+    ts = tombstones(spark, store_name)
+    return df if ts is None else df.join(ts, kind.ts_key, "left_anti")
+
+
+def append_new(spark, table: str, rows: DataFrame, key: str,
+               bucket_col: str, num_buckets: int) -> DataFrame:
+    """Append to a bookkeeping table the ``rows`` whose ``key`` it
+    doesn't hold yet (idempotent), bucket-aligned; returns the
+    checkpointed rows actually appended."""
+    if spark.catalog.tableExists(table):
+        rows = rows.join(spark.table(table), key, "left_anti")
+    rows = rows.localCheckpoint()
+    write_bucketed(rows, table, bucket_col, num_buckets, "append")
+    refresh_table(spark, table)
+    return rows
+
+
+def append_tombstones(spark, kind: StoreKind, store_name: str,
+                      keys: DataFrame) -> DataFrame:
+    """The takedown writer: append ``keys`` (one ``kind.ts_key``
+    column) to ``{store}_tombstones``, skipping keys already there;
+    returns the newly tombstoned keys. O(removed), no rebuild;
+    `compact_store` applies tombstones physically and clears them.
+    Stores whose meta predates the tombstone bucket knob fall back to
+    4 buckets (the reader joins by a guarded broadcast, so the count is
+    about append alignment, not co-location)."""
+    m = read_meta(spark, store_name)
+    nb = int(m[kind.ts_buckets]) if kind.ts_buckets in m.__fields__ else 4
+    return append_new(spark, f"{store_name}_tombstones", keys,
+                      kind.ts_key, kind.ts_key, nb)
+
+
+def ingest_once(spark, kind: StoreKind, store_name: str, batch_id: int,
+                apply_fn, run_id: str = "") -> bool:
+    """One guarded ingest micro-batch: refresh the store's relation
+    caches (each foreachBatch runs in a CLONED session whose cache
+    would otherwise hide earlier appends and mid-stream takedowns),
+    then `apply_batch_once` with the kind's stamped tables (when the
+    store carries provenance stamps) and its restore hook. Returns
+    True if applied, False if skipped as an ingest-log replay."""
+    refresh_store(spark, store_name, (*kind.suffixes, "_tombstones"))
+    stamped = ({t.suffix: t.layout for t in kind.tables}
+               if table_has_prov(spark, store_name + kind.tables[0].suffix)
+               else None)
+    restore = kind.restore
+    return apply_batch_once(
+        spark, store_name, batch_id, apply_fn, run_id=run_id,
+        stamped=stamped,
+        restore_fn=restore and (lambda: restore(spark, store_name)))
+
+
+def compact_store(spark, store_name: str, kind: str) -> None:
+    """Periodic compaction for the incremental-store family: appends
+    accumulate duplicate rows (exact/phash fingerprints, span anchors,
+    replayed ANN code rows), small files (one per append — the classic
+    vector-index fragmentation problem for the cell-partitioned codes
+    table), df segments (bm25 terms), and apply the minhash bucket-size
+    cap only per increment. Compaction rewrites each of the kind's
+    tables deduplicated on its key, with its bucketing or partitioning
+    preserved, tombstones applied physically, and the table's hook run
+    (minhash RE-APPLIES the build-time ``max_bucket_size`` cap
+    globally, pHash drops per-image-removed members, BM25 re-derives
+    the terms table and then the meta scalars). Results are unchanged
+    by construction — anti-joins and semi-joins are multiplicity-
+    insensitive, bm25 readers sum df segments, ANN duplicate ids carry
+    identical codes — except that minhash bands past the cap stop
+    generating candidates, which is the cap's contract. Safe to run any
+    time no ingest is active.
+
+    Two failure-hardening legs run for every kind:
+
+    * HALF-APPLIED batches (provenance-stamped rows with no ingest-log
+      entry — a crash between apply and log whose stream never
+      resumed) are rolled back, so the compacted store holds exactly
+      the confirmed batches plus unguarded builds; the crashed
+      stream's checkpoint never committed the batch, so a resume
+      replays it fresh;
+    * the ingest log folds to one RANGE row per (run_id, contiguous
+      batch interval) and rewrites as a single file
+      (`compact_ingest_log`) — unbounded, a months-long stream pays an
+      O(N)-file listing per exactly-once guard check.
+
+    ``kind`` is one of 'exact', 'minhash', 'span', 'phash', 'bm25',
+    'ann'."""
+    if kind not in KINDS:
+        raise ValueError(f"unknown store kind: {kind}")
+    spec = KINDS[kind]
+    meta = read_meta(spark, store_name)
+    orphans = orphan_provs(spark, store_name,
+                           tuple(store_name + t.suffix for t in spec.tables))
+    ts_table = f"{store_name}_tombstones"
+    had_ts = spark.catalog.tableExists(ts_table)
+    done: dict = {}
+    for t in spec.tables:
+        name = store_name + t.suffix
+        if not spark.catalog.tableExists(name):
+            continue
+        df = anti_orphans(spark.table(name), orphans)
+        df = (df.distinct() if t.dedup is None
+              else df.dropDuplicates(list(t.dedup)))
+        if had_ts and spec.ts_key in df.columns:
+            df = df.join(F.broadcast(spark.table(ts_table)), spec.ts_key,
+                         "left_anti")
+        if t.compact is not None:
+            df = t.compact(spark, store_name, meta, df, done)
+        # checkpointed: the write replaces what it reads
+        done[t.suffix] = df = df.localCheckpoint()
+        write_table(df, name, t.layout, _num_buckets(meta), "overwrite")
+        refresh_table(spark, name)
+    for suffix in ("_tombstones", "_removed_ids"):
+        if spark.catalog.tableExists(store_name + suffix):
+            drop_store_table(spark, store_name + suffix)
+    if spec.restore is not None:
+        spec.restore(spark, store_name)
+    compact_ingest_log(spark, store_name)

@@ -55,6 +55,16 @@ from pipelinedp_spark.noise import create_noise_source
 from pipelinedp_spark import store
 
 
+def _start_batches(stream: DataFrame, checkpoint_dir: str, process):
+    """Start ``stream`` with ``process(batch_df, batch_id)`` as its
+    foreachBatch body: checkpointed at ``checkpoint_dir``, draining the
+    available input (availableNow). Returns the StreamingQuery."""
+    return (stream.writeStream.foreachBatch(process)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
+
+
 def _clip(col: Column, lo: float, hi: float) -> Column:
     return F.greatest(F.least(col, F.lit(float(hi))), F.lit(float(lo)))
 
@@ -935,10 +945,7 @@ def streaming_near_dup_dedup(stream: DataFrame,
         kept.write.mode("append").parquet(output_path)
         kept_blocks.write.mode("append").parquet(state_path)
 
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, checkpoint_dir, _process)
 
 
 def streaming_token_topk(stream: DataFrame,
@@ -1230,10 +1237,7 @@ def streaming_line_dedup(stream: DataFrame,
         # this write never re-reads state_path mid-overwrite.
         new_state.write.mode("overwrite").parquet(state_path)
 
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, checkpoint_dir, _process)
 
 
 def sentence_dedup_batch(batch: DataFrame,
@@ -1426,10 +1430,7 @@ def streaming_semantic_dedup(stream: DataFrame,
         flags.write.mode("append").parquet(output_path)
         new_state.write.mode("overwrite").parquet(state_path)
 
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, checkpoint_dir, _process)
 
 
 def streaming_sentence_dedup(stream: DataFrame,
@@ -1457,10 +1458,7 @@ def streaming_sentence_dedup(stream: DataFrame,
         cleaned.write.mode("append").parquet(output_path)
         new_state.write.mode("overwrite").parquet(state_path)
 
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, checkpoint_dir, _process)
 
 
 def streaming_exact_dedup_store(stream: DataFrame,
@@ -1496,10 +1494,7 @@ def streaming_exact_dedup_store(stream: DataFrame,
             .write.mode("append").parquet(output_path),
             run_id=checkpoint_dir)
 
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, checkpoint_dir, _process)
 
 
 def ingest_exact_batch_idempotent(batch_df: DataFrame,
@@ -1520,47 +1515,29 @@ def ingest_exact_batch_idempotent(batch_df: DataFrame,
     skips the output write too), then appends the survivors'
     fingerprints bucket-aligned. Returns True if applied, False if
     skipped as an ingest-log replay (`store.apply_batch_once`)."""
-    from pipelinedp_spark import store as _store
     from pipelinedp_spark.functions import text as TX
     s = batch_df.sparkSession
-    # Each micro-batch runs in a CLONED session with its own
-    # table-relation cache; resolve the store through the batch's
-    # session and refresh first, or the file listing cached at
-    # trigger 1 hides every later append (reproduced: cross-batch
-    # duplicates silently survived).
-    _store.refresh_table(s, f"{store_name}_fps")
-    if s.catalog.tableExists(f"{store_name}_tombstones"):
-        _store.refresh_table(s, f"{store_name}_tombstones")
-    nbuck = int(store.read_meta(s, store_name)
-                ["num_buckets"])
-    has_prov = _store.table_has_prov(s, f"{store_name}_fps")
 
     def _apply() -> None:
-        fp = TX.rolling_fingerprint(F.col(text_col))
-        firsts = (batch_df.withColumn("fingerprint", fp)
+        nbuck = int(store.read_meta(s, store_name)["num_buckets"])
+        firsts = (batch_df
+                  .withColumn("fingerprint",
+                              TX.rolling_fingerprint(F.col(text_col)))
                   .groupBy("fingerprint")
                   .agg(F.min(id_col).alias(id_col)))
-        fps = s.table(f"{store_name}_fps")
-        ts = _store.tombstones(s, store_name)
-        if ts is not None:
-            fps = fps.join(ts, "fingerprint", "left_anti")
+        fps = store.live_rows(s, store.EXACT, store_name,
+                              s.table(f"{store_name}_fps"))
         survivors = (firsts.repartition(nbuck, "fingerprint")
                      .join(fps, "fingerprint", "left_anti")
                      .localCheckpoint())
         if sink is not None:
             sink(survivors)
-        out = survivors.select("fingerprint")
-        if has_prov:
-            # provenance stamp: lets the guard roll back this append
-            # if we crash before the ingest-log row lands
-            out = _store.with_prov(out, run_id or "", batch_id)
-        (out.write.mode("append").format("parquet")
-         .bucketBy(nbuck, "fingerprint").sortBy("fingerprint")
-         .saveAsTable(f"{store_name}_fps"))
+        store.finish_build(s, store.EXACT, store_name, "append",
+                           {"_fps": survivors.select("fingerprint")},
+                           nbuck, (run_id or "", int(batch_id)))
 
-    return _store.apply_batch_once(
-        s, store_name, batch_id, _apply, run_id=run_id,
-        stamped={"_fps": "fingerprint"} if has_prov else None)
+    return store.ingest_once(s, store.EXACT, store_name, batch_id,
+                             _apply, run_id)
 
 
 def streaming_near_dup_store(stream: DataFrame,
@@ -1597,10 +1574,7 @@ def streaming_near_dup_store(stream: DataFrame,
             sink=lambda surv: surv.write.mode("append")
             .parquet(output_path), run_id=checkpoint_dir)
 
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, checkpoint_dir, _process)
 
 
 def ingest_near_dup_batch_idempotent(batch_df: DataFrame,
@@ -1632,21 +1606,13 @@ def ingest_near_dup_batch_idempotent(batch_df: DataFrame,
     every doc reads as a near-dup of itself and the sink silently
     receives nothing (the batch's output would be lost, worse than a
     duplicate)."""
-    from pipelinedp_spark import store as _store
     from pipelinedp_spark.operators import dedup as D
     s = batch_df.sparkSession
-    for t in (f"{store_name}_bands", f"{store_name}_shingles"):
-        _store.refresh_table(s, t)
-    if s.catalog.tableExists(f"{store_name}_tombstones"):
-        _store.refresh_table(s, f"{store_name}_tombstones")
-    m = store.read_meta(s, store_name)
-    k, num_hashes, rpb = (int(m["k"]), int(m["num_hashes"]),
-                          int(m["rows_per_band"]))
-    nbuck = int(m["num_buckets"])
-
-    has_prov = _store.table_has_prov(s, f"{store_name}_bands")
 
     def _apply() -> None:
+        m = store.read_meta(s, store_name)
+        k, num_hashes, rpb = (int(m["k"]), int(m["num_hashes"]),
+                              int(m["rows_per_band"]))
         # ONE signature pass for the whole micro-batch: pair
         # generation, the store anti-match and the store append all
         # consume the same checkpointed (id, shingles, band-hash)
@@ -1665,15 +1631,14 @@ def ingest_near_dup_batch_idempotent(batch_df: DataFrame,
         if sink is not None:
             sink(survivors)
         D.build_minhash_store(survivors, store_name, text_col, id_col,
-                              k, num_hashes, rpb, nbuck, mode="append",
+                              k, num_hashes, rpb, int(m["num_buckets"]),
+                              mode="append",
                               prov=(run_id or "", int(batch_id)),
                               profile=prof)
         prof.unpersist()
 
-    return _store.apply_batch_once(
-        s, store_name, batch_id, _apply, run_id=run_id,
-        stamped=({"_bands": "bh", "_shingles": "id"}
-                 if has_prov else None))
+    return store.ingest_once(s, store.MINHASH, store_name, batch_id,
+                             _apply, run_id)
 
 
 def streaming_ann_ingest(stream: DataFrame,
@@ -1692,18 +1657,13 @@ def streaming_ann_ingest(stream: DataFrame,
     (`store.apply_batch_once`) — without it a replayed batch appends
     duplicate code rows that occupy extra top-k slots in
     `ann_search_from_index` until `compact_store(kind='ann')` drops
-    them (compaction remains the recovery for the one-batch
-    crash-between-apply-and-log window). Returns the started
-    StreamingQuery."""
+    them. Returns the started StreamingQuery."""
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         ingest_ann_batch_idempotent(batch_df, store_name, batch_id,
                                     vec_col, id_col,
                                     run_id=checkpoint_dir)
 
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, checkpoint_dir, _process)
 
 
 def ingest_ann_batch_idempotent(batch_df: DataFrame,
@@ -1724,21 +1684,13 @@ def ingest_ann_batch_idempotent(batch_df: DataFrame,
     CONVERGENT (round 12): the code rows carry (run_id, batch_id)
     provenance, so the re-run rolls the half-applied partition rows
     back before re-encoding."""
-    from pipelinedp_spark import store as _store
     from pipelinedp_spark.operators.similarity import build_ann_index
-    s = batch_df.sparkSession
-    for t in (f"{store_name}_meta", f"{store_name}_centroids",
-              f"{store_name}_codebooks"):
-        _store.refresh_table(s, t)
-    has_prov = _store.table_has_prov(s, f"{store_name}_codes")
-    return _store.apply_batch_once(
-        s, store_name, batch_id,
+    return store.ingest_once(
+        batch_df.sparkSession, store.ANN, store_name, batch_id,
         lambda: build_ann_index(batch_df, store_name, corpus_id=id_col,
                                 corpus_vec=vec_col, mode="append",
                                 prov=(run_id or "", int(batch_id))),
-        run_id=run_id,
-        stamped=({"_codes": ("partition", "cell")}
-                 if has_prov else None))
+        run_id)
 
 
 def ingest_span_batch_idempotent(batch_df: DataFrame,
@@ -1759,46 +1711,18 @@ def ingest_span_batch_idempotent(batch_df: DataFrame,
     concern for this kind: the ingest path appends reference anchors
     and never reads them — `incremental_decontaminate_spans` applies
     takedowns at read time.)"""
-    from pipelinedp_spark import store as _store
     from pipelinedp_spark.operators import dedup as D
     s = batch_df.sparkSession
-    for t in (f"{store_name}_anchors", f"{store_name}_texts",
-              f"{store_name}_meta"):
-        _store.refresh_table(s, t)
-    m = store.read_meta(s, store_name)
-    has_prov = _store.table_has_prov(s, f"{store_name}_anchors")
-    return _store.apply_batch_once(
-        s, store_name, batch_id,
-        lambda: D.build_span_store(batch_df, store_name, text_col,
-                                   id_col, min_len=int(m["min_len"]),
-                                   seed_len=int(m["seed_len"]),
-                                   mode="append",
-                                   prov=(run_id or "", int(batch_id))),
-        run_id=run_id,
-        stamped=({"_anchors": "ah", "_texts": "id"}
-                 if has_prov else None))
 
+    def _apply() -> None:
+        m = store.read_meta(s, store_name)
+        D.build_span_store(batch_df, store_name, text_col, id_col,
+                           min_len=int(m["min_len"]),
+                           seed_len=int(m["seed_len"]), mode="append",
+                           prov=(run_id or "", int(batch_id)))
 
-def streaming_span_ingest(stream: DataFrame,
-                          store_name: str,
-                          checkpoint_dir: str,
-                          text_col: str = "text",
-                          id_col: str = "doc_id"):
-    """Streaming ingest into the persisted span-decontamination index —
-    the span member of the store family's streaming faces (exact /
-    minhash / ann / bm25 / span / phash all share the exactly-once
-    ingest-log contract since round 11). The caller builds the store
-    first (possibly from an empty reference). Returns the started
-    StreamingQuery."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_span_batch_idempotent(batch_df, store_name, batch_id,
-                                     text_col, id_col,
-                                     run_id=checkpoint_dir)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.ingest_once(s, store.SPAN, store_name, batch_id,
+                             _apply, run_id)
 
 
 def ingest_phash_batch_idempotent(batch_df: DataFrame,
@@ -1818,45 +1742,19 @@ def ingest_phash_batch_idempotent(batch_df: DataFrame,
     SERVING-side concern for this kind: ingest appends reference
     hashes and never reads them — `incremental_phash_dedup` applies
     takedowns at read time.)"""
-    from pipelinedp_spark import store as _store
     from pipelinedp_spark.operators import multimodal as MM
     s = batch_df.sparkSession
-    for t in (f"{store_name}_blocks", f"{store_name}_members",
-              f"{store_name}_meta"):
-        _store.refresh_table(s, t)
-    m = store.read_meta(s, store_name)
-    has_prov = _store.table_has_prov(s, f"{store_name}_blocks")
-    return _store.apply_batch_once(
-        s, store_name, batch_id,
-        lambda: MM.build_phash_store(batch_df, store_name, binary_col,
-                                     id_col,
-                                     max_hamming=int(m["max_hamming"]),
-                                     num_blocks=int(m["num_blocks"]),
-                                     mode="append",
-                                     prov=(run_id or "", int(batch_id))),
-        run_id=run_id,
-        stamped=({"_blocks": "bk", "_members": "ph"}
-                 if has_prov else None))
 
+    def _apply() -> None:
+        m = store.read_meta(s, store_name)
+        MM.build_phash_store(batch_df, store_name, binary_col, id_col,
+                             max_hamming=int(m["max_hamming"]),
+                             num_blocks=int(m["num_blocks"]),
+                             mode="append",
+                             prov=(run_id or "", int(batch_id)))
 
-def streaming_phash_ingest(stream: DataFrame,
-                           store_name: str,
-                           checkpoint_dir: str,
-                           binary_col: str = "image",
-                           id_col: str = "doc_id"):
-    """Streaming ingest into the persisted pHash image-dedup index —
-    the multimodal member of the store family's streaming faces. The
-    caller builds the store first (possibly empty). Returns the
-    started StreamingQuery."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_phash_batch_idempotent(batch_df, store_name, batch_id,
-                                      binary_col, id_col,
-                                      run_id=checkpoint_dir)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.ingest_once(s, store.PHASH, store_name, batch_id,
+                             _apply, run_id)
 
 
 def append_bm25_batch_idempotent(batch_df: DataFrame,
@@ -1873,10 +1771,10 @@ def append_bm25_batch_idempotent(batch_df: DataFrame,
     multiplicity-insensitive: a replayed batch double-counts tf, df and
     the n_docs/total_dl scalars, silently corrupting every score. The
     guard is the standard transactional-sink emulation, shared by the
-    whole store family since round 11 (`store.apply_batch_once`): a
-    ``{store}_ingest_log`` table records processed batch ids; a replay
-    of a logged id is a no-op. Returns True if the batch was applied,
-    False if skipped as a replay.
+    whole store family (`store.ingest_once`): a ``{store}_ingest_log``
+    table records processed batch ids; a replay of a logged id is a
+    no-op. Returns True if the batch was applied, False if skipped as a
+    replay.
 
     A crash BETWEEN append and log is CONVERGENT (round 12): the
     batch's postings/terms rows are provenance-stamped with
@@ -1889,25 +1787,13 @@ def append_bm25_batch_idempotent(batch_df: DataFrame,
     crash-free run. Stores built before round 12 (no stamp columns)
     keep the documented one-batch window; `compact_store` also
     repairs it."""
-    from pipelinedp_spark import store as _store
-    from pipelinedp_spark.operators.retrieval import (
-        build_bm25_index, restore_bm25_meta)
-    s = batch_df.sparkSession
-    has_prov = _store.table_has_prov(s, f"{store_name}_postings")
-
-    def _apply() -> None:
-        for t in (f"{store_name}_postings", f"{store_name}_terms",
-                  f"{store_name}_meta"):
-            _store.refresh_table(s, t)
-        build_bm25_index(batch_df, store_name, text_col=text_col,
-                         id_col=id_col, mode="append",
-                         prov=(run_id or "", int(batch_id)))
-
-    return _store.apply_batch_once(
-        s, store_name, batch_id, _apply, run_id=run_id,
-        stamped=({"_postings": "term", "_terms": "term"}
-                 if has_prov else None),
-        restore_fn=lambda: restore_bm25_meta(s, store_name))
+    from pipelinedp_spark.operators.retrieval import build_bm25_index
+    return store.ingest_once(
+        batch_df.sparkSession, store.BM25, store_name, batch_id,
+        lambda: build_bm25_index(batch_df, store_name, text_col=text_col,
+                                 id_col=id_col, mode="append",
+                                 prov=(run_id or "", int(batch_id))),
+        run_id)
 
 
 def streaming_bm25_ingest(stream: DataFrame,
@@ -1932,10 +1818,7 @@ def streaming_bm25_ingest(stream: DataFrame,
                                      text_col, id_col,
                                      run_id=checkpoint_dir)
 
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, checkpoint_dir, _process)
 
 
 def streaming_cluster_assign(stream: DataFrame, centroids,
@@ -2129,7 +2012,4 @@ def streaming_apply_changes(stream: DataFrame,
         merged = merged.localCheckpoint()
         merged.write.mode("overwrite").parquet(snapshot_path)
 
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, checkpoint_dir, _process)

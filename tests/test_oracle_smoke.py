@@ -71,7 +71,13 @@ SMOKE = ["dp_count_public", "dp_sum_clip_per_partition",
          "multimodal_phash_takedown", "dp_private_l0_bounds",
          # round-12 (the two bm25 gate queries use the _gen_bm25_sql
          # generator — bakes sf0.01 N/avgdl literals, cannot smoke)
-         "dedup_minhash_capped_bucket"]
+         "dedup_minhash_capped_bucket",
+         # store lifecycles with sf-independent oracles (the ANN and
+         # BM25 store oracles bake sf0.01 literals and stay on the
+         # sf0.01 compare)
+         "dedup_exact_incremental", "stream_exact_store_mirror",
+         "dedup_incremental", "stream_near_dup_store_mirror",
+         "doc_decontam_incremental", "multimodal_phash_incremental"]
 
 
 @pytest.fixture(scope="module")

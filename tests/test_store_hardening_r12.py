@@ -30,7 +30,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.readwriter import DataFrameWriter
+from test_store_lifecycle import _crash_on
 
 from pipelinedp_spark import store
 from pipelinedp_spark.operators.dedup import (build_exact_store,
@@ -48,31 +48,6 @@ def _docs(spark, rows):
 def _drop(spark, names):
     for t in names:
         store.drop_store_table(spark, t)
-
-
-def _crash_on(monkeypatch, table: str):
-    """Fault injection at the real boundary: the next write of `table`
-    raises, emulating a process death at exactly that write. Both
-    write paths are armed — the Spark ``saveAsTable`` AND the
-    driver-side parquet fast path an existing file-backed ingest log
-    takes (`store._append_log_row`)."""
-    orig = DataFrameWriter.saveAsTable
-
-    def boom(self, name, *a, **k):
-        if name == table:
-            raise RuntimeError(f"injected crash at {name}")
-        return orig(self, name, *a, **k)
-
-    monkeypatch.setattr(DataFrameWriter, "saveAsTable", boom)
-
-    orig_append = store._append_log_row
-
-    def boom_append(spark, log_table, *a, **k):
-        if log_table == table:
-            raise RuntimeError(f"injected crash at {log_table}")
-        return orig_append(spark, log_table, *a, **k)
-
-    monkeypatch.setattr(store, "_append_log_row", boom_append)
 
 
 def _bm25_rows(spark, name, queries):
