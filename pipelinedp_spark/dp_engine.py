@@ -9,8 +9,9 @@ pipeline_dp/dp_engine.py:115-195, re-expressed Spark-first):
   window L0 sample over pid
   groupBy(pk) final merge                       [map-side partial agg]
   [union empty public partitions]
-  [DP partition selection filter]
-  noise projection + metric formulas            [budget-dependent, lazy]
+  noise projection: selection decision and      [budget-dependent, lazy;
+    every metric draw in ONE select              one Python pass]
+  [selection filter] -> metric formulas         [after the draw]
 
 Budget protocol is two-phase like the reference: ``aggregate`` registers
 MechanismSpecs and returns a lazy result; the noise projection is built only
@@ -370,12 +371,13 @@ class DPEngine:
 
         def finalize() -> DataFrame:
             out = aggregated
+            keep = None
             if pub_df is not None:
                 out = engine._add_empty_public_partitions(out, pub_df, pk_cols)
                 report.append("Added empty public partitions")
             elif not params.post_aggregation_thresholding:
-                out = engine._select_private_partitions(
-                    out, specs["partition_selection"], params, report)
+                keep = engine._selection_keep(specs["partition_selection"],
+                                              params, report)
             pct_values = None
             if pct_hist is not None:
                 if params.percentile_algorithm == "tree":
@@ -386,9 +388,8 @@ class DPEngine:
                     pct_values = engine._percentile_values(
                         pct_hist, params, specs["percentile"], pk_cols,
                         report)
-            out = engine._compute_metrics(out, params, specs, pk_cols, report,
-                                          pct_values)
-            return out
+            return engine._compute_metrics(out, params, specs, pk_cols,
+                                           report, pct_values, keep)
 
         return DPResult(finalize, accountant)
 
@@ -527,7 +528,15 @@ class DPEngine:
     def _select_private_partitions(self, out: DataFrame, spec: MechanismSpec,
                                    params: AggregateParams,
                                    report: List[str]) -> DataFrame:
-        """Reference: pipeline_dp/dp_engine.py:332-400 (semantics)."""
+        """Filter ``out`` on the selection decision (callers that release
+        no metric drawn alongside it)."""
+        return out.filter(self._selection_keep(spec, params, report))
+
+    def _selection_keep(self, spec: MechanismSpec, params: AggregateParams,
+                        report: List[str]) -> Column:
+        """Boolean keep decision of private partition selection over the
+        exact privacy-id count column (reference:
+        pipeline_dp/dp_engine.py:332-400, semantics)."""
         l0 = params.max_partitions_contributed or params.max_contributions
         strategy = params.partition_selection_strategy
         pre = params.pre_threshold
@@ -535,9 +544,8 @@ class DPEngine:
         if strategy == PartitionSelectionStrategy.TRUNCATED_GEOMETRIC:
             probs = dp.truncated_geometric_probabilities(
                 spec.eps, spec.delta, l0)
-            keep = self._noise.geometric_keep(pid_count, probs, pre)
             report.append("Partition selection: truncated geometric")
-            return out.filter(keep)
+            return self._noise.geometric_keep(pid_count, probs, pre)
         # An accountant that reserved a distinct thresholding budget (PLD)
         # pins the threshold's delta via spec.thresholding_delta; otherwise
         # the historical split applies (full delta for Laplace, whose noise
@@ -565,18 +573,31 @@ class DPEngine:
             keep = keep & (pid_count >= F.lit(pre))
         report.append(
             f"Partition selection: {strategy.value}, threshold={threshold:.3f}")
-        return out.filter(keep)
+        return keep
 
     # ------------------------------------------------------------------
     def _compute_metrics(self, out: DataFrame, params: AggregateParams,
                          specs: dict, pk_cols: Sequence[str],
                          report: List[str],
-                         pct_values: Optional[DataFrame] = None) -> DataFrame:
+                         pct_values: Optional[DataFrame] = None,
+                         keep: Optional[Column] = None) -> DataFrame:
+        """Release the metrics of one aggregation. Every noisy column (the
+        selection decision ``keep`` included) is drawn in ONE projection,
+        so the release runs one Python noise pass; rows are filtered after
+        the draw, on the materialized columns the release reads."""
         kind = params.noise_kind.value
         l0 = params.max_partitions_contributed
         linf = params.max_contributions_per_partition
         noise = self._noise
         metric_cols: dict = {}
+        draws: dict = {}    # materialized column name -> noisy Column
+
+        def draw(name: str, col: Column) -> Column:
+            draws[name] = col
+            return F.col(name)
+
+        if keep is not None:
+            keep = draw("__keep__", keep)
         # metric name -> applied noise stddev (constant per metric: the
         # mechanism scale depends only on budget + sensitivities, never on
         # the partition's value), emitted as `<name>_noise_stddev` columns
@@ -589,8 +610,8 @@ class DPEngine:
             sens = self._count_sensitivities(params)
             scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
                                    sens)
-            metric_cols["count"] = noise.add_noise(
-                F.col(_COUNT).cast(DoubleType()), kind, scale)
+            metric_cols["count"] = draw("__dp_count__", noise.add_noise(
+                F.col(_COUNT).cast(DoubleType()), kind, scale))
             stddev_vals["count"] = dp.noise_std(params.noise_kind, spec.eps,
                                                 spec.delta, sens)
             report.append(f"COUNT: {kind} noise, scale={scale:.4g}")
@@ -602,7 +623,8 @@ class DPEngine:
                 params.max_sum_per_partition)
             scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
                                    sens)
-            metric_cols["sum"] = noise.add_noise(F.col(_SUM), kind, scale)
+            metric_cols["sum"] = draw(
+                "__dp_sum__", noise.add_noise(F.col(_SUM), kind, scale))
             stddev_vals["sum"] = dp.noise_std(params.noise_kind, spec.eps,
                                               spec.delta, sens)
             report.append(f"SUM: {kind} noise, scale={scale:.4g}")
@@ -610,47 +632,41 @@ class DPEngine:
             spec = specs["mean"]
             ms = dp.mean_scales(params.noise_kind, spec.eps, spec.delta, l0,
                                 linf, params.min_value, params.max_value)
-            dp_count = noise.add_noise(
-                F.col(_COUNT).cast(DoubleType()), kind, ms.count_scale)
-            dp_norm_sum = noise.add_noise(F.col(_NORM_SUM), kind,
-                                          ms.norm_sum_scale)
-            out = out.withColumn("__dp_count__", dp_count) \
-                     .withColumn("__dp_norm_sum__", dp_norm_sum)
-            dp_mean = (F.lit(ms.mid) + F.col("__dp_norm_sum__") /
-                       F.greatest(F.lit(1.0), F.col("__dp_count__")))
+            dp_count = draw("__dp_count__", noise.add_noise(
+                F.col(_COUNT).cast(DoubleType()), kind, ms.count_scale))
+            dp_norm_sum = draw("__dp_norm_sum__", noise.add_noise(
+                F.col(_NORM_SUM), kind, ms.norm_sum_scale))
+            dp_mean = (F.lit(ms.mid) + dp_norm_sum /
+                       F.greatest(F.lit(1.0), dp_count))
             metric_cols["mean"] = dp_mean
             if Metric.COUNT in params.metric_kinds:
-                metric_cols["count"] = F.col("__dp_count__")
+                metric_cols["count"] = dp_count
             if Metric.SUM in params.metric_kinds:
-                metric_cols["sum"] = dp_mean * F.col("__dp_count__")
+                metric_cols["sum"] = dp_mean * dp_count
             report.append(f"MEAN: normalized-sum estimator, mid={ms.mid}")
         if "variance" in specs:
             spec = specs["variance"]
             vs = dp.variance_scales(params.noise_kind, spec.eps, spec.delta,
                                     l0, linf, params.min_value,
                                     params.max_value)
-            out = out.withColumn(
-                "__dp_count__",
-                noise.add_noise(F.col(_COUNT).cast(DoubleType()), kind,
-                                vs.count_scale))
-            out = out.withColumn(
-                "__dp_norm_sum__",
-                noise.add_noise(F.col(_NORM_SUM), kind, vs.norm_sum_scale))
-            out = out.withColumn(
-                "__dp_norm_sq__",
-                noise.add_noise(F.col(_NORM_SQ), kind, vs.norm_sum_sq_scale))
-            denom = F.greatest(F.lit(1.0), F.col("__dp_count__"))
-            mean_norm = F.col("__dp_norm_sum__") / denom
-            mean_sq_norm = F.col("__dp_norm_sq__") / denom
+            dp_count = draw("__dp_count__", noise.add_noise(
+                F.col(_COUNT).cast(DoubleType()), kind, vs.count_scale))
+            dp_norm_sum = draw("__dp_norm_sum__", noise.add_noise(
+                F.col(_NORM_SUM), kind, vs.norm_sum_scale))
+            dp_norm_sq = draw("__dp_norm_sq__", noise.add_noise(
+                F.col(_NORM_SQ), kind, vs.norm_sum_sq_scale))
+            denom = F.greatest(F.lit(1.0), dp_count)
+            mean_norm = dp_norm_sum / denom
+            mean_sq_norm = dp_norm_sq / denom
             dp_var = mean_sq_norm - mean_norm * mean_norm
             dp_mean = F.lit(vs.mid) + mean_norm
             metric_cols["variance"] = dp_var
             if Metric.MEAN in params.metric_kinds:
                 metric_cols["mean"] = dp_mean
             if Metric.COUNT in params.metric_kinds:
-                metric_cols["count"] = F.col("__dp_count__")
+                metric_cols["count"] = dp_count
             if Metric.SUM in params.metric_kinds:
-                metric_cols["sum"] = dp_mean * F.col("__dp_count__")
+                metric_cols["sum"] = dp_mean * dp_count
             report.append("VARIANCE: 3-way budget split estimator")
         if "privacy_id_count" in specs:
             spec = specs["privacy_id_count"]
@@ -670,13 +686,11 @@ class DPEngine:
                 std = dp.noise_std(nk, spec.eps, noise_delta, sens)
                 threshold = dp.thresholding_from_std(nk, std, thr_delta,
                                                      l0 or 1)
-                noisy = noise.add_noise(
+                noisy = draw("__dp_pid_count__", noise.add_noise(
                     F.col(_PID_COUNT).cast(DoubleType()), nk.value,
-                    dp.noise_scale(nk, spec.eps, noise_delta, sens))
-                out = out.withColumn("__dp_pid_count__", noisy)
-                out = out.filter(
-                    F.col("__dp_pid_count__") >= F.lit(threshold))
-                metric_cols["privacy_id_count"] = F.col("__dp_pid_count__")
+                    dp.noise_scale(nk, spec.eps, noise_delta, sens)))
+                keep = noisy >= F.lit(threshold)
+                metric_cols["privacy_id_count"] = noisy
                 stddev_vals["privacy_id_count"] = std
                 report.append(
                     f"PRIVACY_ID_COUNT: post-aggregation thresholding at "
@@ -684,12 +698,18 @@ class DPEngine:
             else:
                 scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
                                        sens)
-                metric_cols["privacy_id_count"] = noise.add_noise(
-                    F.col(_PID_COUNT).cast(DoubleType()), kind, scale)
+                metric_cols["privacy_id_count"] = draw(
+                    "__dp_pid_count__", noise.add_noise(
+                        F.col(_PID_COUNT).cast(DoubleType()), kind, scale))
                 stddev_vals["privacy_id_count"] = dp.noise_std(
                     params.noise_kind, spec.eps, spec.delta, sens)
                 report.append(
                     f"PRIVACY_ID_COUNT: {kind} noise, scale={scale:.4g}")
+
+        if draws:
+            out = out.select("*", *[c.alias(n) for n, c in draws.items()])
+        if keep is not None:
+            out = out.filter(keep)
 
         if pct_values is not None:
             # Left join: empty public partitions have no histogram rows; a
@@ -1160,14 +1180,15 @@ class DPEngine:
 
         def finalize() -> DataFrame:
             out = aggregated
+            ordered = [F.col(c) for c in pk_cols]
             if pub_df is not None:
                 out = engine._add_empty_public_partitions(out, pub_df,
                                                           pk_cols)
             else:
-                out = engine._select_private_partitions(
-                    out, specs["partition_selection"], agg_params, report)
+                ordered.append(engine._selection_keep(
+                    specs["partition_selection"], agg_params,
+                    report).alias("__keep__"))
             kind = params.noise_kind.value
-            ordered = [F.col(c) for c in pk_cols]
             if params.include_count:
                 cs = specs["count"]
                 scale = dp.noise_scale(params.noise_kind, cs.eps, cs.delta,
@@ -1198,7 +1219,11 @@ class DPEngine:
                                             scale).alias(name))
                 report.append(f"SUM[{name}]: {kind} noise, "
                               f"scale={scale:.4g}")
-            return out.select(*ordered)
+            # one noise projection; selection filters after the draw
+            out = out.select(*ordered)
+            if pub_df is None:
+                out = out.filter(F.col("__keep__")).drop("__keep__")
+            return out
 
         return DPResult(finalize, self._accountant)
 
@@ -1354,19 +1379,17 @@ class DPEngine:
         def finalize() -> DataFrame:
             scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
                                    sens)
-            out = df
-            for c in value_columns:
-                out = out.withColumn(
-                    c, noise.add_noise(F.col(c).cast(DoubleType()), kind,
-                                       scale))
+            # every column's draw in one projection (one Python pass)
+            cols = {c: noise.add_noise(F.col(c).cast(DoubleType()), kind,
+                                       scale)
+                    for c in value_columns}
             if params.output_noise_stddev:
                 std = dp.noise_std(params.noise_kind, spec.eps, spec.delta,
                                    sens)
-                for c in value_columns:
-                    out = out.withColumn(f"{c}_noise_stddev",
-                                         F.lit(float(std)))
+                cols.update({f"{c}_noise_stddev": F.lit(float(std))
+                             for c in value_columns})
             report.append(f"Added {kind} noise, scale={scale:.4g}")
-            return out
+            return df.withColumns(cols)
 
         return DPResult(finalize, self._accountant)
 

@@ -139,20 +139,6 @@ def minhash_signature(shingle_col: Column, num_hashes: int = 8) -> Column:
     return F.array(*sigs)
 
 
-def lsh_bands(signature: Column, rows_per_band: int = 4,
-              num_hashes: int = 8) -> Column:
-    """Band the signature: band j = md5 of the concatenated j-th slice.
-    Docs sharing ANY band hash are near-dup candidates."""
-    num_bands = num_hashes // rows_per_band
-    bands = [
-        F.md5(F.concat_ws(
-            "|", *[F.element_at(signature, j * rows_per_band + r + 1)
-                   for r in range(rows_per_band)]))
-        for j in range(num_bands)
-    ]
-    return F.array(*bands)
-
-
 def hex_to_long(hex_col: Column, digits: int = 15) -> Column:
     """First `digits` hex chars -> non-negative bigint (60 bits for 15)."""
     return F.conv(F.substring(hex_col, 1, digits), 16, 10).cast("long")

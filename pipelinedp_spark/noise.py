@@ -7,8 +7,19 @@ batch). A zero-noise source provides the deterministic mode used by tests and
 the DuckDB oracle (mirrors how the reference mocks ``add_noise``; reference:
 tests/combiners_test.py:266).
 
-Noise is applied AFTER aggregation (one row per partition key), so the
-pandas-UDF cost is negligible relative to the scan/shuffle work.
+Noise is applied AFTER aggregation (one row per partition key), but it is
+not free: every Arrow Python evaluation node keeps its own Python worker
+per task and pays worker start-up, Arrow serialization and memory. Hence
+the rule every release follows: ONE noise projection per release. The
+selection decision, every metric draw and every intermediate a formula
+reads are drawn together in a single ``select`` (one ``ArrowEvalPython``
+node), and rows are filtered only AFTER the draw, on the materialized
+columns the release reads. A draw is evaluated exactly once (the UDFs are
+nondeterministic, so Catalyst neither duplicates nor pushes predicates
+through them); candidates that selection drops also draw noise, which is
+independent of the kept rows' draws and thrown away. New samplers must
+keep this one-pass shape (pinned by
+``tests/test_plan_shapes.py::test_one_python_noise_pass_per_release``).
 """
 
 from __future__ import annotations

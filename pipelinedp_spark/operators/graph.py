@@ -15,8 +15,8 @@ runs twice):
   arrays are ~64 MB — the same order as the tombstone broadcast gate —
   and a vectorized numpy min-label/pointer-jumping loop labels them in
   milliseconds, replacing 3-8 distributed rounds of ~2 jobs each. The
-  result comes back broadcast-hinted so the caller's join doesn't
-  shuffle the corpus.
+  result comes back broadcast-hinted, up to ``BROADCAST_MAX_NODES``
+  nodes, so the caller's join doesn't shuffle the corpus.
 - **Distributed loop** (everything bigger, the 100 TB regime):
   iterative min-label propagation with a FRONTIER: after round 1 only
   labels that changed in the previous round are joined across the
@@ -55,6 +55,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint")
+# Largest driver-labelled node table that comes back broadcast-hinted: 2 x
+# the default 4M-edge `maxDriverEdges` gate (a graph's node count is at
+# most twice its edge count). Fixed, so raising the gate cannot silently
+# raise the broadcast size.
+BROADCAST_MAX_NODES = 8_000_000
 
 
 def _numpy_components(us, vs):
@@ -215,9 +220,9 @@ def connected_components(edges: DataFrame,
 def _components_on_driver(spark, ed: DataFrame, n_edges: int):
     """Collect the (checkpointed, metadata-scale) edge list, label it
     with the vectorized numpy loop, and return the (node, component)
-    frame — broadcast-hinted when small enough that the caller's join
-    back to the corpus should not shuffle it. None on any failure
-    (caller falls back to the distributed loop)."""
+    frame — broadcast-hinted when it has at most ``BROADCAST_MAX_NODES``
+    nodes, so the caller's join back to the corpus does not shuffle it.
+    None on any failure (caller falls back to the distributed loop)."""
     try:
         import numpy as np
         import pandas as pd
@@ -243,10 +248,9 @@ def _components_on_driver(spark, ed: DataFrame, n_edges: int):
         # only now is the checkpoint safe to drop — a failure above must
         # leave it alive for the distributed fallback
         ed.unpersist()
-        # the label table is node-count-sized (<= 2 x the edge gate):
-        # well under the broadcast caps, and broadcasting it keeps the
-        # corpus side of near_dup_clusters' join exchange-free
-        return F.broadcast(out)
+        # broadcasting a label table within the cap keeps the corpus side
+        # of near_dup_clusters' join exchange-free
+        return F.broadcast(out) if len(pdf) <= BROADCAST_MAX_NODES else out
     except Exception:
         return None
 

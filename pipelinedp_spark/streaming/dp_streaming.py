@@ -87,12 +87,13 @@ def _resolve_thresholding(threshold_windows: Optional[bool],
     return threshold_windows
 
 
-def _pid_threshold_filter(per_window: DataFrame, noise, noise_kind: NoiseKind,
-                          eps: float, delta: float, l0: int,
-                          pids_col: str) -> DataFrame:
-    """Noise the per-window privacy-id count with (eps, delta/2) and keep
-    windows whose noisy count clears the (delta/2)-funded threshold —
-    the batch engine's post-aggregation-thresholding construction."""
+def _pid_threshold_filter(noise, noise_kind: NoiseKind, eps: float,
+                          delta: float, l0: int,
+                          pids_col: str) -> "tuple[Column, float]":
+    """The per-window privacy-id count noised with (eps, delta/2), and the
+    (delta/2)-funded threshold a window's noisy count must clear — the
+    batch engine's post-aggregation-thresholding construction. The caller
+    draws the column in its one noise projection (`_draw_windows`)."""
     pid_sens = dp.privacy_id_count_sensitivities(l0)
     nk = noise_kind
     std = dp.noise_std(nk, eps, delta / 2, pid_sens)
@@ -100,8 +101,20 @@ def _pid_threshold_filter(per_window: DataFrame, noise, noise_kind: NoiseKind,
     noisy = noise.add_noise(
         F.col(pids_col).cast(DoubleType()), nk.value,
         dp.noise_scale(nk, eps, delta / 2, pid_sens))
-    out = per_window.withColumn("__dp_pids__", noisy)
-    return out.filter(F.col("__dp_pids__") >= F.lit(threshold))
+    return noisy, threshold
+
+
+def _draw_windows(per_window: DataFrame, draws: dict, pids: str,
+                  threshold: Optional[float]) -> DataFrame:
+    """(window, *draws) with every noisy column drawn in ONE projection
+    (one Python noise pass per release); when ``threshold`` is set, keep
+    only windows whose drawn noisy pid count ``pids`` clears it. The
+    filter reads the same materialized draw the release does."""
+    out = per_window.select("window",
+                            *[c.alias(n) for n, c in draws.items()])
+    if threshold is not None:
+        out = out.filter(F.col(pids) >= F.lit(threshold))
+    return out
 
 
 def dp_streaming_count(stream: DataFrame,
@@ -153,10 +166,9 @@ def dp_streaming_count(stream: DataFrame,
     if do_threshold:
         # pid metric's budget share is (eps/2, delta/2); within it, half the
         # delta funds the noise (Gaussian only) and half the threshold.
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
+        pid_col, threshold = _pid_threshold_filter(
+            noise, noise_kind, epsilon_per_window / 2,
             delta_per_window / 2, l0_per_window, "__pids__")
-        pid_col = F.col("__dp_pids__")
     else:
         pid_sens = dp.privacy_id_count_sensitivities(l0_per_window)
         pid_scale = dp.noise_scale(
@@ -164,11 +176,13 @@ def dp_streaming_count(stream: DataFrame,
             delta_per_window / 2 if delta_per_window else 0.0, pid_sens)
         pid_col = noise.add_noise(F.col("__pids__").cast(DoubleType()),
                                   noise_kind.value, pid_scale)
-    return per_window.select(
-        "window",
-        noise.add_noise(F.col("__count__").cast(DoubleType()),
-                        noise_kind.value, scale).alias("count"),
-        pid_col.alias("privacy_id_count"))
+        threshold = None
+    return _draw_windows(
+        per_window,
+        {"count": noise.add_noise(F.col("__count__").cast(DoubleType()),
+                                  noise_kind.value, scale),
+         "privacy_id_count": pid_col},
+        "privacy_id_count", threshold)
 
 
 def dp_streaming_sum(stream: DataFrame,
@@ -208,14 +222,15 @@ def dp_streaming_sum(stream: DataFrame,
                                 min_sum_per_window, max_sum_per_window)
     scale = dp.noise_scale(noise_kind, eps_sum, delta_sum or 0.0, sens)
     noise = create_noise_source(noise_mode)
+    draws = {"sum": noise.add_noise(F.col("__sum__"), noise_kind.value,
+                                    scale)}
+    threshold = None
     if do_threshold:
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
+        draws["__dp_pids__"], threshold = _pid_threshold_filter(
+            noise, noise_kind, epsilon_per_window / 2,
             delta_per_window / 2, l0_per_window, "__pids__")
-    return per_window.select(
-        "window",
-        noise.add_noise(F.col("__sum__"), noise_kind.value, scale)
-        .alias("sum"))
+    return _draw_windows(per_window, draws, "__dp_pids__",
+                         threshold).select("window", "sum")
 
 
 def dp_streaming_mean(stream: DataFrame,
@@ -283,18 +298,20 @@ def dp_streaming_mean(stream: DataFrame,
                                delta_metric / 2 if delta_metric else 0.0,
                                sum_sens)
     noise = create_noise_source(noise_mode)
+    draws = {
+        "__cnt__": noise.add_noise(F.col("__count__").cast(DoubleType()),
+                                   noise_kind.value, cnt_scale),
+        "__sum__": noise.add_noise(F.col("__nsum__"), noise_kind.value,
+                                   sum_scale)}
+    threshold = None
     if do_threshold:
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
+        draws["__dp_pids__"], threshold = _pid_threshold_filter(
+            noise, noise_kind, epsilon_per_window / 2,
             delta_per_window / 2, l0_per_window, "__pids__")
-    noisy_cnt = noise.add_noise(F.col("__count__").cast(DoubleType()),
-                                noise_kind.value, cnt_scale)
-    noisy_sum = noise.add_noise(F.col("__nsum__"), noise_kind.value,
-                                sum_scale)
-    return per_window.select(
+    return _draw_windows(per_window, draws, "__dp_pids__", threshold).select(
         "window",
-        (F.lit(mid) + noisy_sum / F.greatest(noisy_cnt, F.lit(1.0)))
-        .alias("mean"))
+        (F.lit(mid) + F.col("__sum__") /
+         F.greatest(F.col("__cnt__"), F.lit(1.0))).alias("mean"))
 
 
 def dp_streaming_variance(stream: DataFrame,
@@ -366,20 +383,22 @@ def dp_streaming_variance(stream: DataFrame,
         dp.sum_sensitivities(l0_per_window, linf, 0.0, half * half,
                              None, None))
     noise = create_noise_source(noise_mode)
+    draws = {
+        "__cnt__": noise.add_noise(F.col("__count__").cast(DoubleType()),
+                                   noise_kind.value, cnt_scale),
+        "__sum__": noise.add_noise(F.col("__nsum__"), noise_kind.value,
+                                   sum_scale),
+        "__sq__": noise.add_noise(F.col("__nsq__"), noise_kind.value,
+                                  sq_scale)}
+    threshold = None
     if do_threshold:
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
+        draws["__dp_pids__"], threshold = _pid_threshold_filter(
+            noise, noise_kind, epsilon_per_window / 2,
             delta_per_window / 2, l0_per_window, "__pids__")
-    noisy_cnt = F.greatest(
-        noise.add_noise(F.col("__count__").cast(DoubleType()),
-                        noise_kind.value, cnt_scale), F.lit(1.0))
-    noisy_sum = noise.add_noise(F.col("__nsum__"), noise_kind.value,
-                                sum_scale)
-    noisy_sq = noise.add_noise(F.col("__nsq__"), noise_kind.value,
-                               sq_scale)
-    m = noisy_sum / noisy_cnt
-    return per_window.select(
-        "window", (noisy_sq / noisy_cnt - m * m).alias("variance"))
+    noisy_cnt = F.greatest(F.col("__cnt__"), F.lit(1.0))
+    m = F.col("__sum__") / noisy_cnt
+    return _draw_windows(per_window, draws, "__dp_pids__", threshold).select(
+        "window", (F.col("__sq__") / noisy_cnt - m * m).alias("variance"))
 
 
 def streaming_exact_dedup(stream: DataFrame,
@@ -508,10 +527,9 @@ def dp_streaming_session_count(stream: DataFrame,
                            sens)
     noise = create_noise_source(noise_mode)
     if do_threshold:
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
+        pid_col, threshold = _pid_threshold_filter(
+            noise, noise_kind, epsilon_per_window / 2,
             delta_per_window / 2, l0_per_window, "__pids__")
-        pid_col = F.col("__dp_pids__")
     else:
         pid_sens = dp.privacy_id_count_sensitivities(l0_per_window)
         pid_scale = dp.noise_scale(
@@ -519,11 +537,13 @@ def dp_streaming_session_count(stream: DataFrame,
             delta_per_window / 2 if delta_per_window else 0.0, pid_sens)
         pid_col = noise.add_noise(F.col("__pids__").cast(DoubleType()),
                                   noise_kind.value, pid_scale)
-    return per_window.select(
-        "window",
-        noise.add_noise(F.col("__count__").cast(DoubleType()),
-                        noise_kind.value, scale).alias("session_count"),
-        pid_col.alias("privacy_id_count"))
+        threshold = None
+    return _draw_windows(
+        per_window,
+        {"session_count": noise.add_noise(
+            F.col("__count__").cast(DoubleType()), noise_kind.value, scale),
+         "privacy_id_count": pid_col},
+        "privacy_id_count", threshold)
 
 
 def dp_streaming_vector_sum(stream: DataFrame,
@@ -800,18 +820,19 @@ def _streaming_percentile_tree(per_user: DataFrame,
         return pd.DataFrame({"percentile_value": out_v, "n_users": out_n})
 
     noise = create_noise_source(noise_mode)
-    out = per_window.withColumn("__res__", _descend(F.col("__hist__")))
+    draws = {"__res__": _descend(F.col("__hist__"))}
+    threshold = None
     if do_threshold:
-        out = _pid_threshold_filter(
-            out, noise, noise_kind, epsilon_per_window / 2,
+        draws["__dp_pids__"], threshold = _pid_threshold_filter(
+            noise, noise_kind, epsilon_per_window / 2,
             delta_per_window / 2, l0_per_window, "__pids__")
         n_users = F.col("__dp_pids__")
     else:
         n_users = F.col("__res__.n_users")
-    return out.select("window",
-                      F.col("__res__.percentile_value")
-                      .alias("percentile_value"),
-                      n_users.alias("n_users"))
+    return _draw_windows(per_window, draws, "__dp_pids__", threshold).select(
+        "window",
+        F.col("__res__.percentile_value").alias("percentile_value"),
+        n_users.alias("n_users"))
 
 
 def near_dup_dedup_batch(batch: DataFrame,

@@ -208,3 +208,32 @@ def test_high_eps_variance_percentile_near_exact(spark):
     for r in rows_:
         assert abs(r["variance"] - 0.25) < 0.05
         assert -0.05 <= r["percentile_50"] <= 1.05
+
+
+def test_noise_calibration_under_truncated_geometric_selection(spark):
+    """Selection and metric noise are drawn in one projection; the draws
+    must stay independent and correctly scaled. COUNT+SUM over 5000
+    partitions of 12 users each (every partition kept w.p. > 0.9999 at
+    the selection's eps=2, delta=1e-6): for each metric the empirical std
+    of (noisy - exact) is within 10% of the released `*_noise_stddev`
+    (the relative standard error of a Laplace sample std is
+    0.5 * sqrt(5 / n): 0.016 at the expected n ~ 5000, so a 10% miss is
+    over 6 standard errors), and the mean error is within 5 standard
+    errors of 0."""
+    n_parts, users = 5000, 12
+    df = spark.range(n_parts * users).select(
+        F.col("id").alias("uid"), (F.col("id") % n_parts).alias("grp"),
+        F.lit(1.0).alias("v"))
+    out = _run_agg(spark, df, [pds.Metrics.COUNT, pds.Metrics.SUM],
+                   eps=6.0, delta=1e-6, l0=1, linf=1, min_value=0.0,
+                   max_value=2.0, output_noise_stddev=True,
+                   partition_selection_strategy=(
+                       PartitionSelectionStrategy.TRUNCATED_GEOMETRIC))
+    rows = out.collect()
+    assert len(rows) >= 1000
+    for name in ("count", "sum"):
+        errs = np.array([r[name] - float(users) for r in rows])
+        std = rows[0][f"{name}_noise_stddev"]
+        assert {r[f"{name}_noise_stddev"] for r in rows} == {std}
+        assert abs(errs.std() / std - 1.0) < 0.10, (name, errs.std(), std)
+        assert abs(errs.mean()) < 5 * std / math.sqrt(len(errs))

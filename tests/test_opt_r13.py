@@ -51,6 +51,21 @@ GRAPHS = [
 ]
 
 
+def test_cc_driver_labels_broadcast_only_under_cap(spark, monkeypatch):
+    """The driver path's label frame is broadcast-hinted only up to the
+    fixed `BROADCAST_MAX_NODES`, whatever `maxDriverEdges` says."""
+    df = spark.createDataFrame(GRAPHS[0], "id_a long, id_b long")
+
+    def hinted():
+        out = graph.connected_components(df)
+        return "broadcast" in out._jdf.queryExecution().logical() \
+            .toString().lower()
+
+    assert hinted()
+    monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", 1)
+    assert not hinted()
+
+
 @pytest.mark.parametrize("edges", GRAPHS)
 def test_cc_driver_and_distributed_paths_agree(spark, edges):
     fast = _cc(spark, edges)

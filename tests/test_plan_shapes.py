@@ -150,6 +150,81 @@ def test_noise_udfs_are_nondeterministic(spark):
     assert nplan.count("ArrowEvalPython") == 1, nplan
 
 
+_SEL = pds.PartitionSelectionStrategy
+_RELEASES = {
+    # name: (metrics, extra AggregateParams, public partitions)
+    "count_sum_geometric": ([pds.Metrics.COUNT, pds.Metrics.SUM],
+                            {"partition_selection_strategy":
+                             _SEL.TRUNCATED_GEOMETRIC}, None),
+    "count_sum_laplace_thr": ([pds.Metrics.COUNT, pds.Metrics.SUM],
+                              {"partition_selection_strategy":
+                               _SEL.LAPLACE_THRESHOLDING}, None),
+    "count_sum_gaussian_thr": ([pds.Metrics.COUNT, pds.Metrics.SUM],
+                               {"partition_selection_strategy":
+                                _SEL.GAUSSIAN_THRESHOLDING,
+                                "noise_kind": pds.NoiseKind.GAUSSIAN},
+                               None),
+    "mean": ([pds.Metrics.MEAN], {}, None),
+    "variance_public": ([pds.Metrics.VARIANCE], {},
+                        ["1-URGENT", "2-HIGH"]),
+    "count_pid_count_mean": ([pds.Metrics.COUNT,
+                              pds.Metrics.PRIVACY_ID_COUNT,
+                              pds.Metrics.MEAN], {}, None),
+    "post_aggregation_thresholding": (
+        [pds.Metrics.COUNT, pds.Metrics.PRIVACY_ID_COUNT],
+        {"post_aggregation_thresholding": True}, None),
+}
+
+
+def _release(spark, shape, noise_mode):
+    acct = pds.NaiveBudgetAccountant(10.0, 1e-6)
+    engine = pds.DPEngine(acct, noise_mode=noise_mode)
+    if shape == "multi_sum":
+        res = engine.aggregate_multi_sum(
+            _orders(spark),
+            pds.MultiSumParams(max_partitions_contributed=3,
+                               max_contributions_per_partition=2,
+                               include_count=True,
+                               include_privacy_id_count=True),
+            pds.MultiValueDataFrameExtractors(
+                "o_custkey", "o_orderpriority",
+                value_columns=["o_totalprice", "o_orderkey"]),
+            [pds.MultiSumSpec(min_value=0.0, max_value=1000.0),
+             pds.MultiSumSpec(min_value=0.0, max_value=10.0)])
+    elif shape == "add_dp_noise":
+        res = engine.add_dp_noise(
+            _orders(spark).select("o_orderkey", "o_custkey", "o_totalprice"),
+            ["o_custkey", "o_totalprice"],
+            pds.AddDPNoiseParams(l0_sensitivity=1, linf_sensitivity=1.0,
+                                 output_noise_stddev=True))
+    else:
+        metrics, extra, public = _RELEASES[shape]
+        params = pds.AggregateParams(
+            metrics=metrics, max_partitions_contributed=3,
+            max_contributions_per_partition=2, min_value=0.0,
+            max_value=1000.0, **extra)
+        res = engine.aggregate(
+            _orders(spark), params,
+            pds.DataFrameExtractors("o_custkey", "o_orderpriority",
+                                    "o_totalprice"),
+            public_partitions=public)
+    acct.compute_budgets()
+    return res.dataframe()
+
+
+@pytest.mark.parametrize("shape",
+                         [*_RELEASES, "multi_sum", "add_dp_noise"])
+def test_one_python_noise_pass_per_release(spark, shape):
+    """Every secure release draws all of its noise (selection decision,
+    metric noise, MEAN/VARIANCE intermediates, thresholded pid count) in
+    ONE projection: one ArrowEvalPython node, so one Python worker per
+    task. Zero-noise mode runs no Python at all."""
+    secure = P.explain_str(_release(spark, shape, "secure"), mode="simple")
+    assert secure.count("ArrowEvalPython") == 1, secure
+    zero = P.explain_str(_release(spark, shape, "zero"), mode="simple")
+    assert "ArrowEvalPython" not in zero, zero
+
+
 def test_jaccard_pairs_no_pair_blowup(spark):
     """The inverted-index jaccard must stay on hash joins (no cartesian /
     nested-loop) and keep map-side partial aggregation for the

@@ -503,6 +503,35 @@ def test_dp_streaming_variance(spark, tmp_path):
     assert 2 not in res  # suppressed by DP window selection
 
 
+@pytest.mark.parametrize("metric", ["count", "sum", "mean", "variance"])
+def test_dp_streaming_one_noise_pass(spark, stream_dir, metric):
+    """A windowed secure release draws the selection (noisy pid count) and
+    metric noise in ONE projection: one ArrowEvalPython node, filtered
+    after the draw."""
+    from pipelinedp_spark import plans as P
+    from pipelinedp_spark.streaming import (dp_streaming_mean,
+                                            dp_streaming_variance)
+    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
+    kw = dict(window_duration="1 minute", watermark_delay="0 seconds",
+              epsilon_per_window=10.0, delta_per_window=1e-4,
+              noise_mode="secure")
+    value = dict(min_value=0.0, max_value=5.0,
+                 max_contributions_per_window=3)
+    out = {
+        "count": lambda: dp_streaming_count(
+            stream, "user_id", "ts", max_contributions_per_window=2, **kw),
+        "sum": lambda: dp_streaming_sum(
+            stream, "user_id", "ts", "value", min_sum_per_window=0.0,
+            max_sum_per_window=5.0, **kw),
+        "mean": lambda: dp_streaming_mean(
+            stream, "user_id", "ts", "value", **value, **kw),
+        "variance": lambda: dp_streaming_variance(
+            stream, "user_id", "ts", "value", **value, **kw),
+    }[metric]()
+    plan = P.explain_str(out, mode="simple")
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_read_csv_and_json_roundtrip(spark, tmp_path):
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
