@@ -1,13 +1,26 @@
 """Contribution bounding as window-sampled DataFrame stages.
 
-The reference bounds sensitivity by materializing per-key lists and random-
-sampling them (reference: pipeline_dp/contribution_bounders.py:63-247). Here
-every bounder is expressed as bounded window sampling —
+The reference has five bounder classes (reference:
+pipeline_dp/contribution_bounders.py:63-247). Here they are three
+functions:
+
+- ``bound_cross_and_per_partition``, the one partial-aggregate bounder.
+  Its caps are optional, and the reference's strategies are its modes:
+  both caps (SamplingCrossAndPerPartition), no row sampling because a
+  per-partition sum clip bounds Linf (SamplingCrossPartition),
+  ``l0=None`` (LinfSampler) and both caps ``None`` (NoOpSampler).
+- ``bound_per_privacy_id``: the total-contributions (max_contributions)
+  bounder (SamplingPerPrivacyId).
+- ``bound_rows``: the row-output bounder for callers that need the
+  surviving rows rather than partials (percentile histograms, vector
+  sums, custom combiners, partition selection).
+
+Every sample is bounded window sampling —
 ``row_number() OVER (PARTITION BY keys ORDER BY rand()) <= cap`` — which
 never materializes per-key state, keeps uniform-without-replacement
-semantics, and lets AQE handle skew. Each bounder returns one row per
-(privacy_id, partition_key) carrying partial-aggregate columns; the caller
-finishes with a groupBy(partition_key) merge, so Catalyst plans
+semantics, and lets AQE handle skew. The partial bounders return one row
+per (privacy_id, partition_key) carrying partial-aggregate columns; the
+caller finishes with a groupBy(partition_key) merge, so Catalyst plans
 map-side partial aggregation for both stages.
 
 Plan shape (cross-and-per-partition case, aggregate-first):
@@ -27,7 +40,7 @@ where that sort dominated the pipeline and kept nothing out.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -119,29 +132,40 @@ def _agg_with_oversize_resample(df: DataFrame, keys: Sequence[str],
     return ok.unionByName(resampled)
 
 
+def _resample_oversize_rows(df: DataFrame, counts: DataFrame,
+                            keys: Sequence[str], cap: int,
+                            order_cols: Optional[Sequence[Column]]
+                            ) -> DataFrame:
+    """Rows of groups at or under the cap pass through a broadcast
+    anti-join; only rows of the groups ``counts`` marks oversize
+    window-sample."""
+    over = _oversize_keys(counts, keys, cap)
+    cond = _oversize_key_cond(keys, [f"__ok{i}__" for i in range(len(keys))])
+    ok = df.join(over, on=cond, how="left_anti")
+    big = df.join(over, on=cond, how="left_semi")
+    return ok.unionByName(_limit_per_key(big, keys, cap, order_cols))
+
+
+def _group_counts(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(_GC))
+
+
 def limit_rows_per_key(df: DataFrame, keys: Sequence[str], cap: int,
                        order_cols: Optional[Sequence[Column]]
                        ) -> DataFrame:
     """Row-output cap: keep <= cap rows per key, window-sorting ONLY
     oversize groups when the cap is generous (>= OVERSIZE_SPLIT_MIN_CAP).
 
-    For pipelines that need the surviving ROWS (vector sums clip+explode
-    after sampling; custom combiners applyInPandas over raw rows) the
-    aggregate-first formulation doesn't apply, but the sort can still be
-    confined to groups that exceed the cap: one map-side-combined count
-    pass, then under-cap groups pass through via a broadcast anti-join
-    while only oversize rows window-sample. Binding-regime caps keep the
-    plain window (same threshold rationale as the partial-agg bounders).
+    The aggregate-first formulation needs partials, but the sort can
+    still be confined to groups that exceed the cap: one map-side-
+    combined count pass, then under-cap groups pass through while only
+    oversize rows window-sample. Binding-regime caps keep the plain
+    window (same threshold rationale as the partial-agg bounders).
     """
     if cap < OVERSIZE_SPLIT_MIN_CAP:
         return _limit_per_key(df, keys, cap, order_cols)
-    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias(_GC))
-    over = _oversize_keys(counts, keys, cap)
-    ok_cols = [f"__ok{i}__" for i in range(len(keys))]
-    cond = _oversize_key_cond(keys, ok_cols)
-    ok = df.join(over, on=cond, how="left_anti")
-    big = df.join(over, on=cond, how="left_semi")
-    return ok.unionByName(_limit_per_key(big, keys, cap, order_cols))
+    return _resample_oversize_rows(df, _group_counts(df, keys), keys, cap,
+                                   order_cols)
 
 
 def bound_cross_and_per_partition(
@@ -149,16 +173,19 @@ def bound_cross_and_per_partition(
         pid_col: str,
         pk_cols: Sequence[str],
         partial_aggs: List[Column],
-        l0: int,
-        linf: int,
+        l0: Optional[int],
+        linf: Optional[int],
         row_sampling_needed: bool = True,
         order_cols: Optional[Sequence[Column]] = None) -> DataFrame:
-    """L0 + Linf bounding (reference: contribution_bounders.py:63-112).
+    """L0 + Linf bounding (reference: contribution_bounders.py:63-247).
 
+    ``linf=None`` skips the Linf row sample and ``l0=None`` the L0 key
+    sample; with both ``None`` this is a plain per-(pid, pk) aggregation.
     ``row_sampling_needed=False`` is the count-only fast path: when no
     partial aggregate depends on WHICH rows survive (COUNT is
-    ``least(count, linf)`` regardless of the sample), the Linf window sort is
-    skipped and the caller caps counts inside ``partial_aggs``.
+    ``least(count, linf)`` regardless of the sample; a per-partition sum
+    clip bounds the partial itself), the Linf window sort is skipped and
+    the caller caps inside ``partial_aggs``.
     """
     keys = [pid_col, *pk_cols]
     if row_sampling_needed and linf is not None:
@@ -211,41 +238,40 @@ def bound_per_privacy_id(
     return ok.unionByName(resampled)
 
 
-def bound_cross_partition_only(
-        df: DataFrame,
-        pid_col: str,
-        pk_cols: Sequence[str],
-        partial_aggs: List[Column],
-        l0: int,
-        order_cols: Optional[Sequence[Column]] = None) -> DataFrame:
-    """L0-only bounding (reference: contribution_bounders.py:160-202): the
-    per-partition contribution is bounded by value semantics (e.g. the
-    per-partition sum clip), so only cross-partition sampling happens."""
-    per_pid_pk = df.groupBy(pid_col, *pk_cols).agg(*partial_aggs)
-    return _limit_per_key(per_pid_pk, [pid_col], l0, order_cols)
+def bound_rows(df: DataFrame,
+               pid_col: str,
+               pk_cols: Sequence[str],
+               l0: Optional[int] = None,
+               linf: Optional[int] = None,
+               total: Optional[int] = None,
+               order_cols: Optional[Sequence[Column]] = None
+               ) -> Tuple[DataFrame, DataFrame]:
+    """Row-output bounding: the per-privacy-id total cap ``total`` (the
+    max_contributions mode), or the Linf row cap followed by the L0 key
+    sample; a cap left ``None`` is not applied. Returns ``(rows, keys)``:
+    the surviving rows and their distinct (pid, *pk) key frame.
 
-
-def bound_linf_only(
-        df: DataFrame,
-        pid_col: str,
-        pk_cols: Sequence[str],
-        partial_aggs: List[Column],
-        linf: int,
-        row_sampling_needed: bool = True,
-        order_cols: Optional[Sequence[Column]] = None) -> DataFrame:
-    """Linf-only bounding (reference: contribution_bounders.py:205-231)."""
+    With a generous Linf cap (>= OVERSIZE_SPLIT_MIN_CAP) ONE
+    map-side-combined per-(pid, pk) count pass drives both steps: the
+    Linf sample sorts only oversize groups, and the L0 key sample draws
+    from the count frame instead of a distinct() over raw rows. The L0
+    sample is kept by an equality semi-join, so rows whose pid or
+    partition key is null do not survive it.
+    """
     keys = [pid_col, *pk_cols]
-    if row_sampling_needed and linf is not None:
-        if linf >= OVERSIZE_SPLIT_MIN_CAP:
-            return _agg_with_oversize_resample(df, keys, linf,
-                                               partial_aggs, order_cols)
-        return (_limit_per_key(df, keys, linf, order_cols)
-                .groupBy(*keys).agg(*partial_aggs))
-    return df.groupBy(*keys).agg(*partial_aggs)
-
-
-def bound_noop(df: DataFrame, pid_col: str, pk_cols: Sequence[str],
-               partial_aggs: List[Column]) -> DataFrame:
-    """No sampling — bounds assumed enforced by the data
-    (reference: contribution_bounders.py:234-247)."""
-    return df.groupBy(pid_col, *pk_cols).agg(*partial_aggs)
+    if total is not None:
+        rows = limit_rows_per_key(df, [pid_col], total, order_cols)
+        return rows, rows.select(*keys).distinct()
+    counts = None
+    rows = df
+    if linf is not None and linf >= OVERSIZE_SPLIT_MIN_CAP:
+        counts = _group_counts(df, keys)
+        rows = _resample_oversize_rows(df, counts, keys, linf, order_cols)
+    elif linf is not None:
+        rows = _limit_per_key(df, keys, linf, order_cols)
+    if l0 is None:
+        return rows, rows.select(*keys).distinct()
+    candidates = (counts.select(*keys) if counts is not None
+                  else rows.select(*keys).distinct())
+    sampled = _limit_per_key(candidates, [pid_col], l0, order_cols)
+    return rows.join(sampled, on=keys, how="left_semi"), sampled

@@ -4,9 +4,10 @@ Pipeline (mirrors the reference stage order, reference:
 pipeline_dp/dp_engine.py:115-195, re-expressed Spark-first):
 
   select(pid, partition cols, value)            [column pruning -> scan]
-  [left_semi broadcast join public partitions]  [drop non-public early]
+  [isin filter / broadcast semi-join of public  [drop non-public early;
+   partitions]                                   one input stage]
   window Linf sample -> groupBy(pid, pk) partial aggregates
-  window L0 sample over pid
+  window L0 sample over pid                     [bounds resolved once]
   groupBy(pk) final merge                       [map-side partial agg]
   [union empty public partitions]
   noise projection: selection decision and      [budget-dependent, lazy;
@@ -36,7 +37,7 @@ from pipelinedp_spark import contribution_bounders as bounders
 from pipelinedp_spark import dp_computations as dp
 from pipelinedp_spark.aggregate_params import (AddDPNoiseParams,
                                                AggregateParams, MechanismType,
-                                               Metric, Metrics, NoiseKind,
+                                               Metric, NoiseKind,
                                                PartitionSelectionStrategy,
                                                SelectPartitionsParams)
 from pipelinedp_spark.budget_accounting import (MechanismSpec,
@@ -219,16 +220,65 @@ class _CompositeCustomCombiner(CustomCombiner):
         return out
 
 
-def _resolve_prefiltered(params, public_partitions) -> bool:
-    """Validate + read `public_partitions_already_filtered` (reference:
-    aggregate_params.py:267-269 — only usable with public partitions).
-    Param types without the flag (e.g. MultiSumParams) read as False."""
-    if getattr(params, "public_partitions_already_filtered", False) \
-            and public_partitions is None:
-        raise ValueError(
-            "public_partitions_already_filtered requires public "
-            "partitions")
-    return getattr(params, "public_partitions_already_filtered", False)
+@dataclasses.dataclass(frozen=True)
+class _Bounds:
+    """An aggregation's contribution bounds, resolved once: the caps the
+    bounders enforce (``None``: not enforced) and the sensitivities the
+    noise prices. Row-level quantities (COUNT, per-contribution SUM,
+    MEAN, VARIANCE, PERCENTILE, VECTOR_SUM/MEAN) are priced with
+    (row_l0, row_linf); per-(pid, pk) quantities (PRIVACY_ID_COUNT, a
+    per-partition-clipped SUM, partition selection) with key_l0."""
+
+    l0: Optional[int]
+    linf: Optional[int]
+    total: Optional[int]
+    row_l0: Optional[int]
+    row_linf: Optional[int]
+    key_l0: Optional[int]
+
+
+def _resolve_bounds(params: AggregateParams) -> _Bounds:
+    """``max_contributions = M`` caps a privacy id's rows in total: it
+    touches at most M rows (row-level L0 = 1, Linf = M) in at most M
+    partitions (per-(pid, pk) L0 = M). Otherwise L0/Linf are the declared
+    caps; ``perform_cross_partition_contribution_bounding=False`` skips
+    the L0 sample but keeps L0 in the sensitivity (reference:
+    pipeline_dp/dp_engine.py:418-430)."""
+    enforce = not params.contribution_bounds_already_enforced
+    m = params.max_contributions
+    if m is not None:
+        return _Bounds(None, None, m if enforce else None, 1, m, m)
+    l0 = params.max_partitions_contributed
+    linf = params.max_contributions_per_partition
+    sample_l0 = enforce and params.perform_cross_partition_contribution_bounding
+    return _Bounds(l0 if sample_l0 else None, linf if enforce else None,
+                   None, l0, linf, l0)
+
+
+def _describe_bounds(bounds: _Bounds, params: AggregateParams,
+                     sampling: bool) -> str:
+    """The explain-report text of an aggregation's bounding stage."""
+    if params.contribution_bounds_already_enforced:
+        return "none (already enforced)"
+    if bounds.total is not None:
+        return f"<= {bounds.total} total contributions per privacy id"
+    parts = []
+    if params.min_sum_per_partition is not None:
+        parts.append(f"per-partition sum clip to "
+                     f"[{params.min_sum_per_partition}, "
+                     f"{params.max_sum_per_partition}]")
+    elif bounds.linf is not None:
+        note = ""
+        if sampling:
+            note = (" [aggregate-first: sort only oversize groups]"
+                    if bounds.linf >= bounders.OVERSIZE_SPLIT_MIN_CAP
+                    else " [window sample]")
+        parts.append(f"Linf <= {bounds.linf} rows per (pid, partition){note}")
+    parts.append(f"L0 <= {bounds.l0} partitions per pid"
+                 if bounds.l0 is not None else
+                 f"cross-partition bounding disabled (L0 <= {bounds.key_l0} "
+                 f"kept in sensitivity)")
+    return ", ".join(parts)
 
 
 def _vector_clip_udf(norm_kind: str, max_norm: float):
@@ -296,47 +346,17 @@ class DPEngine:
             return self._aggregate_vector_sum(df, params, extractors,
                                               public_partitions, report)
 
-        # --- stage 1: projection (drives Catalyst column pruning). ---
-        cols = [F.col(extractors.privacy_id_column).alias(_PID)] + \
-            [F.col(c) for c in pk_cols]
-        if extractors.value_column is not None:
-            cols.append(
-                F.col(extractors.value_column).cast(DoubleType()).alias(_VALUE))
-        data = df.select(*cols)
-        report.append(
-            f"Extracted ({extractors.privacy_id_column}, "
-            f"{pk_cols}, {extractors.value_column})")
-
-        # --- stage 2: drop non-public partitions before bounding. ---
-        prefiltered = _resolve_prefiltered(params, public_partitions)
-        pub_df = None
-        if public_partitions is not None:
-            pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
-                                            public_partitions, like=df)
-            if prefiltered:
-                report.append(
-                    "Public partitions pre-filtered by caller (drop "
-                    "skipped)")
-            elif (not isinstance(public_partitions, DataFrame)
-                    and len(pk_cols) == 1 and len(public_partitions) <= 1000):
-                # Small local key list: isin() compiles to a pushed-down
-                # scan filter — no broadcast exchange at all.
-                values = [p[0] if isinstance(p, tuple) else p
-                          for p in public_partitions]
-                data = data.filter(F.col(pk_cols[0]).isin(values))
-                report.append("Dropped non-public partitions (isin pushdown)")
-            else:
-                data = data.join(F.broadcast(pub_df), on=pk_cols,
-                                 how="left_semi")
-                report.append(
-                    "Dropped non-public partitions (broadcast semi-join)")
+        # --- stages 1-2: projection + non-public partition drop. ---
+        data, pub_df = self._input_stage(df, params, extractors,
+                                         public_partitions, report)
 
         # --- stage 3: budget requests. ---
         specs = self._request_budgets(params, public_partitions is not None,
                                       report)
 
         # --- stage 4: contribution bounding + per-(pid,pk) partials. ---
-        per_pid_pk = self._bound_contributions(data, params, pk_cols,
+        bounds = _resolve_bounds(params)
+        per_pid_pk = self._bound_contributions(data, params, bounds, pk_cols,
                                                metric_kinds, report)
 
         # Percentiles ride a parallel bounded-histogram pipeline and join
@@ -347,10 +367,11 @@ class DPEngine:
             if params.percentile_algorithm == "tree":
                 from pipelinedp_spark import quantile_tree as qt
                 pct_hist = self._percentile_histogram(
-                    data, params, pk_cols, report, nbins=qt.num_leaves())
+                    data, params, bounds, pk_cols, report,
+                    nbins=qt.num_leaves())
             else:
-                pct_hist = self._percentile_histogram(data, params, pk_cols,
-                                                      report)
+                pct_hist = self._percentile_histogram(data, params, bounds,
+                                                      pk_cols, report)
 
         # --- stage 5: final merge per partition key. ---
         final_aggs = [
@@ -377,21 +398,69 @@ class DPEngine:
                 report.append("Added empty public partitions")
             elif not params.post_aggregation_thresholding:
                 keep = engine._selection_keep(specs["partition_selection"],
-                                              params, report)
+                                              params, bounds.key_l0, report)
             pct_values = None
             if pct_hist is not None:
-                if params.percentile_algorithm == "tree":
-                    pct_values = engine._percentile_tree_values(
-                        pct_hist, params, specs["percentile"], pk_cols,
-                        report)
-                else:
-                    pct_values = engine._percentile_values(
-                        pct_hist, params, specs["percentile"], pk_cols,
-                        report)
-            return engine._compute_metrics(out, params, specs, pk_cols,
-                                           report, pct_values, keep)
+                values = (engine._percentile_tree_values
+                          if params.percentile_algorithm == "tree"
+                          else engine._percentile_values)
+                pct_values = values(pct_hist, params, specs["percentile"],
+                                    bounds, pk_cols, report)
+            return engine._compute_metrics(out, params, specs, bounds,
+                                           pk_cols, report, pct_values, keep)
 
         return DPResult(finalize, accountant)
+
+    # ------------------------------------------------------------------
+    def _input_stage(self, df: DataFrame, params,
+                     extractors: DataFrameExtractors, public_partitions,
+                     report: List[str],
+                     values: Optional[List[Column]] = None):
+        """Input stage of every aggregation path: project (pid, partition
+        keys, ``values``) so Catalyst prunes the scan, then drop
+        non-public partitions before bounding. ``values`` defaults to the
+        extractors' value column as a double, when set. Returns the
+        projected data and the public-partition frame (``None`` without
+        public partitions)."""
+        pk_cols = extractors.partition_key_columns
+        if values is None:
+            values = ([] if extractors.value_column is None else
+                      [F.col(extractors.value_column).cast(DoubleType())
+                       .alias(_VALUE)])
+        data = df.select(F.col(extractors.privacy_id_column).alias(_PID),
+                         *[F.col(c) for c in pk_cols], *values)
+        report.append(
+            f"Extracted ({extractors.privacy_id_column}, "
+            f"{pk_cols}, {extractors.value_column})")
+        # `public_partitions_already_filtered` is only usable with public
+        # partitions (reference: aggregate_params.py:267-269); param types
+        # without the flag (MultiSumParams) read as False.
+        prefiltered = getattr(params, "public_partitions_already_filtered",
+                              False)
+        if public_partitions is None:
+            if prefiltered:
+                raise ValueError("public_partitions_already_filtered "
+                                 "requires public partitions")
+            return data, None
+        pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
+                                        public_partitions, like=df)
+        if prefiltered:
+            report.append(
+                "Public partitions pre-filtered by caller (drop skipped)")
+        elif (not isinstance(public_partitions, DataFrame)
+                and len(pk_cols) == 1 and len(public_partitions) <= 1000):
+            # Small local key list: isin() compiles to a pushed-down scan
+            # filter — no broadcast exchange at all.
+            keys = [p[0] if isinstance(p, tuple) else p
+                    for p in public_partitions]
+            data = data.filter(F.col(pk_cols[0]).isin(keys))
+            report.append("Dropped non-public partitions (isin pushdown)")
+        else:
+            data = data.join(F.broadcast(pub_df), on=pk_cols,
+                             how="left_semi")
+            report.append(
+                "Dropped non-public partitions (broadcast semi-join)")
+        return data, pub_df
 
     # ------------------------------------------------------------------
     def _request_budgets(self, params: AggregateParams, public: bool,
@@ -440,25 +509,20 @@ class DPEngine:
 
     # ------------------------------------------------------------------
     def _bound_contributions(self, data: DataFrame, params: AggregateParams,
-                             pk_cols: Sequence[str], metric_kinds: set,
+                             bounds: _Bounds, pk_cols: Sequence[str],
+                             metric_kinds: set,
                              report: List[str]) -> DataFrame:
         per_partition_clip = params.min_sum_per_partition is not None
-        partials: List[Column] = []
-        value_dependent = bool(metric_kinds
-                               & {Metric.SUM, Metric.MEAN, Metric.VARIANCE,
-                                  Metric.PERCENTILE, Metric.VECTOR_SUM})
-        linf = params.max_contributions_per_partition
-        l0 = params.max_partitions_contributed
-
-        # Count partial: when no row sampling runs, cap with least().
-        sampling = value_dependent and not per_partition_clip
-        if params.contribution_bounds_already_enforced or \
-                params.max_contributions is not None or sampling or \
-                linf is None:
-            partials.append(F.count(F.lit(1)).alias(_PP_COUNT))
-        else:
-            partials.append(
-                F.least(F.count(F.lit(1)), F.lit(linf)).alias(_PP_COUNT))
+        # Row sampling matters only when a partial depends on WHICH rows
+        # survive; otherwise the count partial is capped with least().
+        sampling = not per_partition_clip and bool(
+            metric_kinds & {Metric.SUM, Metric.MEAN, Metric.VARIANCE,
+                            Metric.PERCENTILE, Metric.VECTOR_SUM})
+        linf, l0 = bounds.linf, bounds.l0
+        count = F.count(F.lit(1))
+        partials: List[Column] = [
+            (count if sampling or linf is None
+             else F.least(count, F.lit(linf))).alias(_PP_COUNT)]
 
         if Metric.SUM in metric_kinds:
             if per_partition_clip:
@@ -477,67 +541,30 @@ class DPEngine:
             if Metric.VARIANCE in metric_kinds:
                 partials.append(F.sum(norm * norm).alias(_PP_NORM_SQ))
 
-        if params.contribution_bounds_already_enforced:
-            report.append("Contribution bounding: none (already enforced)")
-            return bounders.bound_noop(data, _PID, pk_cols, partials)
-        if params.max_contributions is not None:
-            report.append(
-                f"Contribution bounding: <= {params.max_contributions} total "
-                "contributions per privacy id")
+        report.append("Contribution bounding: " +
+                      _describe_bounds(bounds, params, sampling))
+        if bounds.total is not None:
             return bounders.bound_per_privacy_id(data, _PID, pk_cols, partials,
-                                                 params.max_contributions,
+                                                 bounds.total,
                                                  self._order_cols)
-        if not params.perform_cross_partition_contribution_bounding:
-            # L0 sampling disabled by the caller (data already satisfies the
-            # L0 bound); max_partitions_contributed STAYS in the noise
-            # sensitivity (reference: pipeline_dp/dp_engine.py:418-430 —
-            # LinfSampler / NoOpSampler dispatch).
-            if per_partition_clip or not (sampling and linf is not None):
-                report.append(
-                    "Contribution bounding: cross-partition bounding "
-                    f"disabled (L0 <= {l0} kept in sensitivity), no sampling")
-                return bounders.bound_noop(data, _PID, pk_cols, partials)
-            report.append(
-                "Contribution bounding: cross-partition bounding disabled "
-                f"(L0 <= {l0} kept in sensitivity), Linf <= {linf} rows per "
-                "(pid, partition)")
-            return bounders.bound_linf_only(data, _PID, pk_cols, partials,
-                                            linf, row_sampling_needed=True,
-                                            order_cols=self._order_cols)
-        if per_partition_clip:
-            report.append(
-                f"Contribution bounding: per-partition sum clip to "
-                f"[{params.min_sum_per_partition}, "
-                f"{params.max_sum_per_partition}], L0 <= {l0}")
-            return bounders.bound_cross_partition_only(data, _PID, pk_cols,
-                                                       partials, l0,
-                                                       self._order_cols)
-        plan_note = ""
-        if sampling and linf is not None:
-            plan_note = (" [aggregate-first: sort only oversize groups]"
-                         if linf >= bounders.OVERSIZE_SPLIT_MIN_CAP
-                         else " [window sample]")
-        report.append(
-            f"Contribution bounding: Linf <= {linf} rows per (pid, partition),"
-            f" L0 <= {l0} partitions per pid{plan_note}")
         return bounders.bound_cross_and_per_partition(
             data, _PID, pk_cols, partials, l0, linf,
             row_sampling_needed=sampling, order_cols=self._order_cols)
 
     # ------------------------------------------------------------------
     def _select_private_partitions(self, out: DataFrame, spec: MechanismSpec,
-                                   params: AggregateParams,
+                                   params, l0: int,
                                    report: List[str]) -> DataFrame:
         """Filter ``out`` on the selection decision (callers that release
         no metric drawn alongside it)."""
-        return out.filter(self._selection_keep(spec, params, report))
+        return out.filter(self._selection_keep(spec, params, l0, report))
 
-    def _selection_keep(self, spec: MechanismSpec, params: AggregateParams,
+    def _selection_keep(self, spec: MechanismSpec, params, l0: int,
                         report: List[str]) -> Column:
         """Boolean keep decision of private partition selection over the
         exact privacy-id count column (reference:
-        pipeline_dp/dp_engine.py:332-400, semantics)."""
-        l0 = params.max_partitions_contributed or params.max_contributions
+        pipeline_dp/dp_engine.py:332-400, semantics). ``params`` carries
+        the strategy and pre-threshold; ``l0`` is the per-(pid, pk) L0."""
         strategy = params.partition_selection_strategy
         pre = params.pre_threshold
         pid_count = F.col(_PID_COUNT)
@@ -577,8 +604,8 @@ class DPEngine:
 
     # ------------------------------------------------------------------
     def _compute_metrics(self, out: DataFrame, params: AggregateParams,
-                         specs: dict, pk_cols: Sequence[str],
-                         report: List[str],
+                         specs: dict, bounds: _Bounds,
+                         pk_cols: Sequence[str], report: List[str],
                          pct_values: Optional[DataFrame] = None,
                          keep: Optional[Column] = None) -> DataFrame:
         """Release the metrics of one aggregation. Every noisy column (the
@@ -586,8 +613,7 @@ class DPEngine:
         so the release runs one Python noise pass; rows are filtered after
         the draw, on the materialized columns the release reads."""
         kind = params.noise_kind.value
-        l0 = params.max_partitions_contributed
-        linf = params.max_contributions_per_partition
+        l0, linf = bounds.row_l0, bounds.row_linf
         noise = self._noise
         metric_cols: dict = {}
         draws: dict = {}    # materialized column name -> noisy Column
@@ -607,7 +633,7 @@ class DPEngine:
 
         if "count" in specs:
             spec = specs["count"]
-            sens = self._count_sensitivities(params)
+            sens = dp.count_sensitivities(l0, linf)
             scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
                                    sens)
             metric_cols["count"] = draw("__dp_count__", noise.add_noise(
@@ -617,10 +643,11 @@ class DPEngine:
             report.append(f"COUNT: {kind} noise, scale={scale:.4g}")
         if "sum" in specs:
             spec = specs["sum"]
+            per_partition = params.min_sum_per_partition is not None
             sens = dp.sum_sensitivities(
-                l0 or params.max_contributions, linf, params.min_value,
-                params.max_value, params.min_sum_per_partition,
-                params.max_sum_per_partition)
+                bounds.key_l0 if per_partition else l0, linf,
+                params.min_value, params.max_value,
+                params.min_sum_per_partition, params.max_sum_per_partition)
             scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
                                    sens)
             metric_cols["sum"] = draw(
@@ -670,8 +697,7 @@ class DPEngine:
             report.append("VARIANCE: 3-way budget split estimator")
         if "privacy_id_count" in specs:
             spec = specs["privacy_id_count"]
-            sens = dp.privacy_id_count_sensitivities(
-                l0 or params.max_contributions)
+            sens = dp.privacy_id_count_sensitivities(bounds.key_l0)
             if params.post_aggregation_thresholding:
                 # Reference: combiners.py:360-416 + dp_computations.py:821-885:
                 # noised pid-count released iff >= threshold; rows below are
@@ -685,7 +711,7 @@ class DPEngine:
                 noise_delta = spec.delta - thr_delta
                 std = dp.noise_std(nk, spec.eps, noise_delta, sens)
                 threshold = dp.thresholding_from_std(nk, std, thr_delta,
-                                                     l0 or 1)
+                                                     bounds.key_l0)
                 noisy = draw("__dp_pid_count__", noise.add_noise(
                     F.col(_PID_COUNT).cast(DoubleType()), nk.value,
                     dp.noise_scale(nk, spec.eps, noise_delta, sens)))
@@ -742,10 +768,13 @@ class DPEngine:
     # state, no UDAF.)
     # ------------------------------------------------------------------
     def _percentile_histogram(self, data: DataFrame, params: AggregateParams,
-                              pk_cols: Sequence[str],
+                              bounds: _Bounds, pk_cols: Sequence[str],
                               report: List[str],
                               nbins: Optional[int] = None) -> DataFrame:
-        """Contribution-bounded per-(pk, bin) counts of clipped values."""
+        """Contribution-bounded per-(pk, bin) counts of clipped values. The
+        row bounder's count pass drives both bounding steps in the
+        generous-cap case, so the (pk, bin) aggregation is the only other
+        corpus-sized pass."""
         nbins = nbins or params.percentile_bins
         lo, hi = float(params.min_value), float(params.max_value)
         width = (hi - lo) / nbins if hi > lo else 1.0
@@ -755,57 +784,15 @@ class DPEngine:
                     F.lit(width))).cast("int")
         report.append(
             f"PERCENTILE: {nbins}-bin histogram sketch over [{lo}, {hi}]")
-        binned = data.withColumn(_BIN, bin_col)
-        enforce = not params.contribution_bounds_already_enforced
-        linf = params.max_contributions_per_partition
-        l0 = params.max_partitions_contributed
-        if not enforce or (linf is None and l0 is None):
-            return (binned.groupBy(*pk_cols, _BIN)
-                    .agg(F.count(F.lit(1)).cast("double").alias(_BCNT)))
-        # ONE map-side-combined per-(pid, pk) count pass drives BOTH
-        # bounding steps, so no full-data shuffle or sort remains in the
-        # common generous-cap case: the Linf sample touches only
-        # oversize groups (joined back, AQE-broadcast / eliminated when
-        # the set is empty), and the L0 key sample draws from the tiny
-        # totals frame instead of a distinct() over raw rows. The final
-        # (pk, bin) histogram aggregates map-side, so the only
-        # corpus-sized data movement left is the scan itself.
-        keys = [_PID, *pk_cols]
-        rows = binned
-        if (linf is not None
-                and linf >= bounders.OVERSIZE_SPLIT_MIN_CAP):
-            totals = binned.groupBy(*keys).agg(
-                F.count(F.lit(1)).alias(bounders._GC))
-            over = bounders._oversize_keys(totals, keys, linf)
-            ok_cols = [f"__ok{i}__" for i in range(len(keys))]
-            cond = bounders._oversize_key_cond(keys, ok_cols)
-            ok = binned.join(over, on=cond, how="left_anti")
-            big = binned.join(over, on=cond, how="left_semi")
-            rows = ok.unionByName(
-                bounders._limit_per_key(big, keys, linf,
-                                        self._order_cols))
-            if l0 is not None:
-                # key sample drawn from the tiny totals frame, not a
-                # distinct() over raw rows
-                keyset = bounders._limit_per_key(
-                    totals.select(*keys), [_PID], l0, self._order_cols)
-                rows = rows.join(keyset, on=keys, how="left_semi")
-        else:
-            # Binding-cap regime (see bounders.OVERSIZE_SPLIT_MIN_CAP):
-            # plain window sample.
-            if linf is not None:
-                rows = bounders._limit_per_key(rows, keys, linf,
-                                               self._order_cols)
-            if l0 is not None:
-                keyset = bounders._limit_per_key(
-                    rows.select(*keys).distinct(), [_PID], l0,
-                    self._order_cols)
-                rows = rows.join(keyset, on=keys, how="left_semi")
+        rows, _ = bounders.bound_rows(
+            data.withColumn(_BIN, bin_col), _PID, pk_cols, bounds.l0,
+            bounds.linf, bounds.total, self._order_cols)
         return (rows.groupBy(*pk_cols, _BIN)
                 .agg(F.count(F.lit(1)).cast("double").alias(_BCNT)))
 
     def _percentile_values(self, hist: DataFrame, params: AggregateParams,
-                           spec: MechanismSpec, pk_cols: Sequence[str],
+                           spec: MechanismSpec, bounds: _Bounds,
+                           pk_cols: Sequence[str],
                            report: List[str]) -> DataFrame:
         """Noise the histogram cells, then linearly interpolate each
         requested quantile from the cumulative counts. One mechanism
@@ -814,10 +801,9 @@ class DPEngine:
         nbins = params.percentile_bins
         lo, hi = float(params.min_value), float(params.max_value)
         width = (hi - lo) / nbins if hi > lo else 1.0
-        l0 = params.max_partitions_contributed or params.max_contributions or 1
-        linf = params.max_contributions_per_partition or 1
         scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
-                               dp.count_sensitivities(l0, linf))
+                               dp.count_sensitivities(bounds.row_l0,
+                                                      bounds.row_linf))
         # Densify to the full public bin domain before noising: empty bins
         # MUST draw noise too, otherwise bin occupancy (which one user can
         # flip) reaches the release un-noised. nbins rows per partition
@@ -858,7 +844,7 @@ class DPEngine:
 
     def _percentile_tree_values(self, hist: DataFrame,
                                 params: AggregateParams,
-                                spec: MechanismSpec,
+                                spec: MechanismSpec, bounds: _Bounds,
                                 pk_cols: Sequence[str],
                                 report: List[str]) -> DataFrame:
         """Quantile-tree path (reference: pipeline_dp/combiners.py:629-719
@@ -875,9 +861,6 @@ class DPEngine:
         lo, hi = float(params.min_value), float(params.max_value)
         height = qt.DEFAULT_TREE_HEIGHT
         branching = qt.DEFAULT_BRANCHING_FACTOR
-        l0 = params.max_partitions_contributed or params.max_contributions \
-            or 1
-        linf = params.max_contributions_per_partition or 1
         kind = params.noise_kind
         # Per-level composition: each entry touches one node per level, so
         # each level is a histogram of sensitivity l0*linf released with
@@ -885,7 +868,7 @@ class DPEngine:
         scale = dp.noise_scale(
             kind, spec.eps / height,
             (spec.delta / height) if spec.delta else 0.0,
-            dp.count_sensitivities(l0, linf))
+            dp.count_sensitivities(bounds.row_l0, bounds.row_linf))
         ps = [float(p) for p in params.percentiles_to_compute]
         noise_mode = self._noise_mode
         kind_value = kind.value
@@ -928,40 +911,22 @@ class DPEngine:
                               report: List[str]) -> DPResult:
         pk_cols = extractors.partition_key_columns
         size = int(params.vector_size)
-        data = df.select(
-            F.col(extractors.privacy_id_column).alias(_PID),
-            *[F.col(c) for c in pk_cols],
-            F.col(extractors.value_column).cast("array<double>")
-            .alias(_VALUE))
-        pub_df = None
-        if public_partitions is not None:
-            pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
-                                            public_partitions, like=df)
-            if _resolve_prefiltered(params, public_partitions):
-                report.append("Public partitions pre-filtered by caller")
-            else:
-                data = data.join(F.broadcast(pub_df), on=list(pk_cols),
-                                 how="left_semi")
-                report.append("Dropped non-public partitions")
+        data, pub_df = self._input_stage(
+            df, params, extractors, public_partitions, report,
+            [F.col(extractors.value_column).cast("array<double>")
+             .alias(_VALUE)])
         specs = self._request_budgets(params, public_partitions is not None,
                                       report)
-        linf = params.max_contributions_per_partition
-        if not params.contribution_bounds_already_enforced and \
-                linf is not None:
-            data = bounders.limit_rows_per_key(data, [_PID, *pk_cols],
-                                               linf, self._order_cols)
         # L0 sampling happens at the (pid, pk) KEY level BEFORE the d-fold
         # explode: the key frame is 1/d the exploded size, and sampling
-        # first means the explode+sum subtree is built once (a post-explode
-        # keys.distinct() branch would recompute it for the semi-join).
-        l0 = params.max_partitions_contributed
-        if not params.contribution_bounds_already_enforced and l0 is not None:
-            keys = bounders._limit_per_key(
-                data.select(_PID, *pk_cols).distinct(), [_PID], l0,
-                self._order_cols)
-            data = data.join(keys, on=[_PID, *pk_cols], how="left_semi")
-        else:
-            keys = data.select(_PID, *pk_cols).distinct()
+        # first means the explode+sum subtree is built once.
+        bounds = _resolve_bounds(params)
+        report.append("Contribution bounding: " +
+                      _describe_bounds(bounds, params, sampling=True))
+        data, keys = bounders.bound_rows(data, _PID, pk_cols, bounds.l0,
+                                         bounds.linf, bounds.total,
+                                         self._order_cols)
+        l0, linf = bounds.row_l0, bounds.row_linf
         clip = _vector_clip_udf(params.vector_norm_kind.value,
                                 float(params.vector_max_norm))
         data = data.withColumn(_VALUE, clip(F.col(_VALUE)))
@@ -995,14 +960,15 @@ class DPEngine:
                 report.append("Added empty public partitions (zero vectors)")
             elif not params.post_aggregation_thresholding:
                 kept = engine._select_private_partitions(
-                    pid_counts, specs["partition_selection"], params, report)
+                    pid_counts, specs["partition_selection"], params,
+                    bounds.key_l0, report)
                 out = out.join(kept.select(*pk_cols), on=list(pk_cols),
                                how="left_semi")
             # One clipped vector per contribution; <= linf contributions per
             # (pid, pk) => per-partition norm bound scales by linf.
             sens = dp.vector_sum_sensitivities(
-                l0 or 1, params.vector_norm_kind.value,
-                float(params.vector_max_norm) * (linf or 1), size)
+                l0, params.vector_norm_kind.value,
+                float(params.vector_max_norm) * linf, size)
             spec = specs["vector_sum"]
             scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
                                    sens)
@@ -1017,7 +983,7 @@ class DPEngine:
                 cnt_spec = specs["vector_count"]
                 cnt_scale = dp.noise_scale(
                     params.noise_kind, cnt_spec.eps, cnt_spec.delta,
-                    dp.count_sensitivities(l0 or 1, linf or 1))
+                    dp.count_sensitivities(l0, linf))
                 noisy_n = contrib_counts.withColumn(
                     "__vn__", engine._noise.add_noise(
                         F.col("__vn__"), params.noise_kind.value,
@@ -1059,32 +1025,16 @@ class DPEngine:
         report = [f"DPEngine.aggregate_custom: {type(combiner).__name__}"]
         self._reports.append(report)
         pk_cols = extractors.partition_key_columns
-        cols = [F.col(extractors.privacy_id_column).alias(_PID)] + \
-            [F.col(c) for c in pk_cols]
-        if extractors.value_column is not None:
-            cols.append(F.col(extractors.value_column).cast(DoubleType())
-                        .alias(_VALUE))
-        data = df.select(*cols)
-        if public_partitions is not None \
-                and not _resolve_prefiltered(params, public_partitions):
-            pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
-                                            public_partitions, like=df)
-            data = data.join(F.broadcast(pub_df), on=list(pk_cols),
-                             how="left_semi")
+        data, _ = self._input_stage(df, params, extractors,
+                                    public_partitions, report)
         with self._accountant.scope(params.budget_weight):
             combiner.request_budget(self._accountant)
-        linf = params.max_contributions_per_partition
-        l0 = params.max_partitions_contributed
-        if not params.contribution_bounds_already_enforced:
-            if linf is not None:
-                data = bounders.limit_rows_per_key(
-                    data, [_PID, *pk_cols], linf, self._order_cols)
-            if l0 is not None:
-                keys = bounders._limit_per_key(
-                    data.select(_PID, *pk_cols).distinct(), [_PID], l0,
-                    self._order_cols)
-                data = data.join(keys, on=[_PID, *pk_cols], how="left_semi")
-        report.append(f"Contribution bounding: Linf <= {linf}, L0 <= {l0}")
+        bounds = _resolve_bounds(params)
+        data, _ = bounders.bound_rows(data, _PID, pk_cols, bounds.l0,
+                                      bounds.linf, bounds.total,
+                                      self._order_cols)
+        report.append("Contribution bounding: " +
+                      _describe_bounds(bounds, params, sampling=True))
         schema = ", ".join(
             [f"`{c}` {data.schema[c].dataType.simpleString()}"
              for c in pk_cols] + [combiner.output_schema])
@@ -1113,22 +1063,10 @@ class DPEngine:
         l0 = params.max_partitions_contributed
         linf = params.max_contributions_per_partition
 
-        cols = [F.col(extractors.privacy_id_column).alias(_PID)] + \
-            [F.col(c) for c in pk_cols] + \
+        data, pub_df = self._input_stage(
+            df, params, extractors, public_partitions, report,
             [F.col(c).cast(DoubleType()).alias(f"__value{i}__")
-             for i, c in enumerate(extractors.value_columns)]
-        data = df.select(*cols)
-
-        pub_df = None
-        if public_partitions is not None:
-            pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
-                                            public_partitions, like=df)
-            if _resolve_prefiltered(params, public_partitions):
-                report.append("Public partitions pre-filtered by caller")
-            else:
-                data = data.join(F.broadcast(pub_df), on=list(pk_cols),
-                                 how="left_semi")
-                report.append("Dropped non-public partitions")
+             for i, c in enumerate(extractors.value_columns)])
 
         with self._accountant.scope(params.budget_weight):
             mt = params.noise_kind.convert_to_mechanism_type()
@@ -1170,13 +1108,6 @@ class DPEngine:
              for i in range(len(sum_specs))]
         aggregated = per_pid_pk.groupBy(*pk_cols).agg(*final_aggs)
         engine = self
-        agg_params = AggregateParams(
-            metrics=[Metrics.COUNT],
-            max_partitions_contributed=l0,
-            max_contributions_per_partition=linf,
-            noise_kind=params.noise_kind,
-            partition_selection_strategy=params.partition_selection_strategy,
-            pre_threshold=params.pre_threshold)
 
         def finalize() -> DataFrame:
             out = aggregated
@@ -1186,7 +1117,7 @@ class DPEngine:
                                                           pk_cols)
             else:
                 ordered.append(engine._selection_keep(
-                    specs["partition_selection"], agg_params,
+                    specs["partition_selection"], params, l0,
                     report).alias("__keep__"))
             kind = params.noise_kind.value
             if params.include_count:
@@ -1227,13 +1158,6 @@ class DPEngine:
 
         return DPResult(finalize, self._accountant)
 
-    def _count_sensitivities(self, params: AggregateParams) -> dp.Sensitivities:
-        if params.max_contributions is not None:
-            m = params.max_contributions
-            return dp.Sensitivities(l1=float(m), l2=float(m))
-        return dp.count_sensitivities(params.max_partitions_contributed,
-                                      params.max_contributions_per_partition)
-
     # ------------------------------------------------------------------
     def _add_empty_public_partitions(self, out: DataFrame, pub_df: DataFrame,
                                      pk_cols: Sequence[str]) -> DataFrame:
@@ -1249,32 +1173,26 @@ class DPEngine:
         """Reference: pipeline_dp/dp_engine.py:220-305 (semantics)."""
         report = ["DPEngine.select_partitions"]
         self._reports.append(report)
-        if params.partition_selection_strategy == \
-                PartitionSelectionStrategy.WEIGHTED_GAUSSIAN_THRESHOLDING:
-            return self._select_partitions_weighted_gaussian(
-                df, params, extractors, report)
         pk_cols = extractors.partition_key_columns
-        data = df.select(
-            F.col(extractors.privacy_id_column).alias(_PID),
-            *[F.col(c) for c in pk_cols]).distinct()
-        bounded = bounders._limit_per_key(data, [_PID],
-                                          params.max_partitions_contributed,
-                                          self._order_cols)
-        counts = bounded.groupBy(*pk_cols).agg(
-            F.count(F.lit(1)).alias(_PID_COUNT))
+        l0 = params.max_partitions_contributed
+        # only the L0-sampled (pid, pk) key frame is read
+        _, bounded = bounders.bound_rows(
+            df.select(F.col(extractors.privacy_id_column).alias(_PID),
+                      *[F.col(c) for c in pk_cols]),
+            _PID, pk_cols, l0=l0, order_cols=self._order_cols)
         with self._accountant.scope(params.budget_weight):
             spec = self._accountant.request_budget(
                 params.partition_selection_strategy.mechanism_type)
-        agg_params = AggregateParams(
-            metrics=[Metrics.COUNT],
-            max_partitions_contributed=params.max_partitions_contributed,
-            max_contributions_per_partition=1,
-            partition_selection_strategy=params.partition_selection_strategy,
-            pre_threshold=params.pre_threshold)
+        if params.partition_selection_strategy == \
+                PartitionSelectionStrategy.WEIGHTED_GAUSSIAN_THRESHOLDING:
+            return self._select_partitions_weighted_gaussian(
+                bounded, params, spec, pk_cols, report)
+        counts = bounded.groupBy(*pk_cols).agg(
+            F.count(F.lit(1)).alias(_PID_COUNT))
         engine = self
 
         def finalize() -> DataFrame:
-            kept = engine._select_private_partitions(counts, spec, agg_params,
+            kept = engine._select_private_partitions(counts, spec, params, l0,
                                                      report)
             return kept.select(*pk_cols)
 
@@ -1282,8 +1200,8 @@ class DPEngine:
 
     # ------------------------------------------------------------------
     def _select_partitions_weighted_gaussian(
-            self, df: DataFrame, params: SelectPartitionsParams,
-            extractors: DataFrameExtractors,
+            self, bounded: DataFrame, params: SelectPartitionsParams,
+            spec: MechanismSpec, pk_cols: Sequence[str],
             report: List[str]) -> DPResult:
         """Weighted Gaussian partition selection (reference:
         pipeline_dp/dp_engine.py:664-714): each (pid, pk) is weighted
@@ -1292,22 +1210,12 @@ class DPEngine:
         distinct -> L0 window sample -> pid-window weight (reuses the
         sample's hash partitioning) -> groupBy(pk) weight sum -> noisy
         threshold filter."""
-        pk_cols = extractors.partition_key_columns
-        data = df.select(
-            F.col(extractors.privacy_id_column).alias(_PID),
-            *[F.col(c) for c in pk_cols]).distinct()
-        bounded = bounders._limit_per_key(data, [_PID],
-                                          params.max_partitions_contributed,
-                                          self._order_cols)
         w = Window.partitionBy(_PID)
         weighted = bounded.withColumn(
             "__weight__",
             F.lit(1.0) / F.sqrt(F.count(F.lit(1)).over(w)))
         weights = weighted.groupBy(*pk_cols).agg(
             F.sum("__weight__").alias("__weight__"))
-        with self._accountant.scope(params.budget_weight):
-            spec = self._accountant.request_budget(
-                params.partition_selection_strategy.mechanism_type)
         engine = self
         l0 = params.max_partitions_contributed
 

@@ -44,10 +44,6 @@ def distinct_token_count(text: Column) -> Column:
     return F.size(F.array_distinct(tokens(text)))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
@@ -124,19 +120,6 @@ def shingles(text: Column, k: int = 3) -> Column:
         lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(k)]))
     return F.when(n >= k, F.array_distinct(grams)) \
         .otherwise(F.array(F.concat_ws(" ", t)))
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 8) -> Column:
-    """Minhash over hex-string hashes: element i is
-    min(md5(i || ':' || shingle)). Returns array<string> of length
-    num_hashes. Lexicographic min over md5 hex == uniform minhash."""
-    sigs = [
-        F.array_min(
-            F.transform(shingle_col,
-                        lambda s, i=i: F.md5(F.concat(F.lit(f"{i}:"), s))))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
 
 
 def hex_to_long(hex_col: Column, digits: int = 15) -> Column:

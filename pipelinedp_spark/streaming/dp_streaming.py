@@ -51,6 +51,7 @@ from pyspark.sql.types import DoubleType
 
 from pipelinedp_spark import dp_computations as dp
 from pipelinedp_spark.aggregate_params import NoiseKind
+from pipelinedp_spark.dp_engine import _clip
 from pipelinedp_spark.noise import create_noise_source
 from pipelinedp_spark import store
 
@@ -63,10 +64,6 @@ def _start_batches(stream: DataFrame, checkpoint_dir: str, process):
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start())
-
-
-def _clip(col: Column, lo: float, hi: float) -> Column:
-    return F.greatest(F.least(col, F.lit(float(hi))), F.lit(float(lo)))
 
 
 def _resolve_thresholding(threshold_windows: Optional[bool],
@@ -143,21 +140,36 @@ def dp_streaming_count(stream: DataFrame,
     public and releases every non-empty window (presence leak documented in
     the module docstring).
     """
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
     win = F.window(F.col(timestamp_col), window_duration, slide_duration) \
         if slide_duration else F.window(F.col(timestamp_col),
                                         window_duration)
-    linf = max_contributions_per_window
     per_user = (stream
                 .withWatermark(timestamp_col, watermark_delay)
                 .groupBy(F.col(privacy_id_col).alias("__pid__"),
-                         win.alias("window"))
-                .agg(F.least(F.count(F.lit(1)), F.lit(linf))
-                     .alias("__capped__")))
-    per_window = per_user.groupBy("window").agg(
-        F.sum("__capped__").alias("__count__"),
-        F.count(F.lit(1)).alias("__pids__"))
+                         win.alias("window")))
+    return _release_capped_counts(
+        per_user, "count", epsilon_per_window, max_contributions_per_window,
+        l0_per_window, noise_kind, delta_per_window, noise_mode,
+        threshold_windows)
 
+
+def _release_capped_counts(per_user, count_name: str,
+                           epsilon_per_window: float, linf: int,
+                           l0_per_window: int, noise_kind: NoiseKind,
+                           delta_per_window: float, noise_mode: str,
+                           threshold_windows: Optional[bool]) -> DataFrame:
+    """Release body of the windowed counts: ``per_user`` is the grouped
+    per-(user, window) data; each group's count is capped at ``linf``,
+    then merged per window into (window, ``count_name``,
+    privacy_id_count). Epsilon splits half to the count noise, half to
+    the pid-count noise / DP window selection."""
+    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
+    per_window = (per_user
+                  .agg(F.least(F.count(F.lit(1)), F.lit(linf))
+                       .alias("__capped__"))
+                  .groupBy("window").agg(
+                      F.sum("__capped__").alias("__count__"),
+                      F.count(F.lit(1)).alias("__pids__")))
     sens = dp.count_sensitivities(l0_per_window, linf)
     scale = dp.noise_scale(noise_kind, epsilon_per_window / 2,
                            delta_per_window / 2 if delta_per_window else 0.0,
@@ -179,8 +191,8 @@ def dp_streaming_count(stream: DataFrame,
         threshold = None
     return _draw_windows(
         per_window,
-        {"count": noise.add_noise(F.col("__count__").cast(DoubleType()),
-                                  noise_kind.value, scale),
+        {count_name: noise.add_noise(F.col("__count__").cast(DoubleType()),
+                                     noise_kind.value, scale),
          "privacy_id_count": pid_col},
         "privacy_id_count", threshold)
 
@@ -255,8 +267,13 @@ def dp_streaming_mean(stream: DataFrame,
     dp_streaming_count. Returns (window, mean)."""
     do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
     linf = max_contributions_per_window
-    mid = (min_value + max_value) / 2.0
     half = (max_value - min_value) / 2.0
+    ms = dp.mean_scales(noise_kind,
+                        epsilon_per_window / 2 if do_threshold
+                        else epsilon_per_window,
+                        delta_per_window / 2 if do_threshold
+                        else delta_per_window,
+                        l0_per_window, linf, min_value, max_value)
     # Clip EVERY contribution to [min_value, max_value] first (batch-engine
     # per-value clipping: one out-of-range value shifts the user's window
     # sum by at most half, it cannot saturate it), then bound the per-user
@@ -268,7 +285,7 @@ def dp_streaming_mean(stream: DataFrame,
     clipped = stream.withColumn(
         "__nval__",
         _clip(F.col(value_col).cast(DoubleType()), float(min_value),
-              float(max_value)) - F.lit(mid))
+              float(max_value)) - F.lit(ms.mid))
     per_user = (clipped
                 .withWatermark(timestamp_col, watermark_delay)
                 .groupBy(F.col(privacy_id_col).alias("__pid__"),
@@ -284,25 +301,12 @@ def dp_streaming_mean(stream: DataFrame,
         F.sum("__nsum__").alias("__nsum__"),
         F.count(F.lit(1)).alias("__pids__"))
 
-    eps_metric = epsilon_per_window / 2 if do_threshold \
-        else epsilon_per_window
-    delta_metric = delta_per_window / 2 if do_threshold \
-        else delta_per_window
-    cnt_sens = dp.count_sensitivities(l0_per_window, linf)
-    sum_sens = dp.sum_sensitivities(l0_per_window, linf, -half, half,
-                                    None, None)
-    cnt_scale = dp.noise_scale(noise_kind, eps_metric / 2,
-                               delta_metric / 2 if delta_metric else 0.0,
-                               cnt_sens)
-    sum_scale = dp.noise_scale(noise_kind, eps_metric / 2,
-                               delta_metric / 2 if delta_metric else 0.0,
-                               sum_sens)
     noise = create_noise_source(noise_mode)
     draws = {
         "__cnt__": noise.add_noise(F.col("__count__").cast(DoubleType()),
-                                   noise_kind.value, cnt_scale),
+                                   noise_kind.value, ms.count_scale),
         "__sum__": noise.add_noise(F.col("__nsum__"), noise_kind.value,
-                                   sum_scale)}
+                                   ms.norm_sum_scale)}
     threshold = None
     if do_threshold:
         draws["__dp_pids__"], threshold = _pid_threshold_filter(
@@ -310,7 +314,7 @@ def dp_streaming_mean(stream: DataFrame,
             delta_per_window / 2, l0_per_window, "__pids__")
     return _draw_windows(per_window, draws, "__dp_pids__", threshold).select(
         "window",
-        (F.lit(mid) + F.col("__sum__") /
+        (F.lit(ms.mid) + F.col("__sum__") /
          F.greatest(F.col("__cnt__"), F.lit(1.0))).alias("mean"))
 
 
@@ -341,12 +345,17 @@ def dp_streaming_variance(stream: DataFrame,
     dp_streaming_count. Returns (window, variance)."""
     do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
     linf = max_contributions_per_window
-    mid = (min_value + max_value) / 2.0
     half = (max_value - min_value) / 2.0
+    vs = dp.variance_scales(noise_kind,
+                            epsilon_per_window / 2 if do_threshold
+                            else epsilon_per_window,
+                            delta_per_window / 2 if do_threshold
+                            else delta_per_window,
+                            l0_per_window, linf, min_value, max_value)
     clipped = stream.withColumn(
         "__nval__",
         _clip(F.col(value_col).cast(DoubleType()), float(min_value),
-              float(max_value)) - F.lit(mid))
+              float(max_value)) - F.lit(vs.mid))
     per_user = (clipped
                 .withWatermark(timestamp_col, watermark_delay)
                 .groupBy(F.col(privacy_id_col).alias("__pid__"),
@@ -366,30 +375,14 @@ def dp_streaming_variance(stream: DataFrame,
         F.sum("__nsq__").alias("__nsq__"),
         F.count(F.lit(1)).alias("__pids__"))
 
-    eps_metric = epsilon_per_window / 2 if do_threshold \
-        else epsilon_per_window
-    delta_metric = delta_per_window / 2 if do_threshold \
-        else delta_per_window
-    eps3 = eps_metric / 3
-    delta3 = delta_metric / 3 if delta_metric else 0.0
-    cnt_scale = dp.noise_scale(
-        noise_kind, eps3, delta3, dp.count_sensitivities(l0_per_window,
-                                                         linf))
-    sum_scale = dp.noise_scale(
-        noise_kind, eps3, delta3,
-        dp.sum_sensitivities(l0_per_window, linf, -half, half, None, None))
-    sq_scale = dp.noise_scale(
-        noise_kind, eps3, delta3,
-        dp.sum_sensitivities(l0_per_window, linf, 0.0, half * half,
-                             None, None))
     noise = create_noise_source(noise_mode)
     draws = {
         "__cnt__": noise.add_noise(F.col("__count__").cast(DoubleType()),
-                                   noise_kind.value, cnt_scale),
+                                   noise_kind.value, vs.count_scale),
         "__sum__": noise.add_noise(F.col("__nsum__"), noise_kind.value,
-                                   sum_scale),
+                                   vs.norm_sum_scale),
         "__sq__": noise.add_noise(F.col("__nsq__"), noise_kind.value,
-                                  sq_scale)}
+                                  vs.norm_sum_sq_scale)}
     threshold = None
     if do_threshold:
         draws["__dp_pids__"], threshold = _pid_threshold_filter(
@@ -503,47 +496,18 @@ def dp_streaming_session_count(stream: DataFrame,
     construction and presence-leak contract as dp_streaming_count).
     Returns (window, session_count, privacy_id_count), noised doubles.
     """
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
-    linf = max_sessions_per_window
     sessions = (stream
                 .withWatermark(timestamp_col, watermark_delay)
                 .groupBy(F.col(privacy_id_col).alias("__pid__"),
                          F.session_window(F.col(timestamp_col), gap_duration)
                          .alias("__sw__"))
                 .agg(F.count(F.lit(1)).alias("__n_events__")))
-    per_user = (sessions
-                .groupBy("__pid__",
-                         F.window(F.col("__sw__"), window_duration)
-                         .alias("window"))
-                .agg(F.least(F.count(F.lit(1)), F.lit(linf))
-                     .alias("__capped__")))
-    per_window = per_user.groupBy("window").agg(
-        F.sum("__capped__").alias("__count__"),
-        F.count(F.lit(1)).alias("__pids__"))
-
-    sens = dp.count_sensitivities(l0_per_window, linf)
-    scale = dp.noise_scale(noise_kind, epsilon_per_window / 2,
-                           delta_per_window / 2 if delta_per_window else 0.0,
-                           sens)
-    noise = create_noise_source(noise_mode)
-    if do_threshold:
-        pid_col, threshold = _pid_threshold_filter(
-            noise, noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2, l0_per_window, "__pids__")
-    else:
-        pid_sens = dp.privacy_id_count_sensitivities(l0_per_window)
-        pid_scale = dp.noise_scale(
-            noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2 if delta_per_window else 0.0, pid_sens)
-        pid_col = noise.add_noise(F.col("__pids__").cast(DoubleType()),
-                                  noise_kind.value, pid_scale)
-        threshold = None
-    return _draw_windows(
-        per_window,
-        {"session_count": noise.add_noise(
-            F.col("__count__").cast(DoubleType()), noise_kind.value, scale),
-         "privacy_id_count": pid_col},
-        "privacy_id_count", threshold)
+    per_user = sessions.groupBy(
+        "__pid__", F.window(F.col("__sw__"), window_duration).alias("window"))
+    return _release_capped_counts(
+        per_user, "session_count", epsilon_per_window,
+        max_sessions_per_window, l0_per_window, noise_kind, delta_per_window,
+        noise_mode, threshold_windows)
 
 
 def dp_streaming_vector_sum(stream: DataFrame,

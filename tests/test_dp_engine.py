@@ -318,3 +318,74 @@ class TestCrossBoundingAndNoiseStddev:
         row = result.dataframe().collect()[0]
         assert row["v"] == 10.0
         assert row["v_noise_stddev"] == pytest.approx(3.0 * math.sqrt(2))
+
+
+def _count_rows_combiner():
+    from pipelinedp_spark.aggregate_params import MechanismType
+    from pipelinedp_spark.dp_engine import CustomCombiner
+
+    class CountRows(CustomCombiner):
+        output_schema = "n long"
+
+        def request_budget(self, accountant):
+            self.spec = accountant.request_budget(MechanismType.LAPLACE)
+
+        def compute(self, pdf):
+            return {"n": len(pdf)}
+
+    return CountRows()
+
+
+class TestMaxContributions:
+    """``max_contributions = M`` caps a privacy id's rows in total on every
+    aggregation path, and every release prices it. Probe frame: one user
+    with 500 rows at 9.0, 20 users with one row at 1.0, one public
+    partition, M = 1 — the bounded answer keeps one row per user."""
+
+    # case -> (metrics, output column, bounded zero-noise answer)
+    CASES = {
+        "count": ([pds.Metrics.COUNT], "count", 21.0),
+        "sum": ([pds.Metrics.SUM], "sum", 29.0),
+        "mean": ([pds.Metrics.MEAN], "mean", 29 / 21),
+        # E[x^2] - E[x]^2 over twenty 1.0s and one 9.0
+        "variance": ([pds.Metrics.VARIANCE], "variance", 1280 / 441),
+        "percentile": ([pds.Metrics.PERCENTILE(50)], "percentile_50", 1.0),
+        "vector_sum": ([pds.Metrics.VECTOR_SUM], "vector_sum",
+                       [29.0, 29.0]),
+        "custom": ([], "n", 21),
+    }
+
+    def _release(self, spark, case, noise_mode):
+        from pyspark.sql import functions as F
+        metrics, col, _ = self.CASES[case]
+        rows = [(0, "g", 9.0)] * 500 + [(u, "g", 1.0) for u in range(1, 21)]
+        df = spark.createDataFrame(rows, "pid int, pk string, v double")
+        kw = dict(min_value=0.0, max_value=10.0)
+        if case == "vector_sum":
+            df = df.withColumn("v", F.array("v", "v"))
+            kw = dict(vector_max_norm=10.0, vector_size=2)
+        elif case == "custom":
+            kw = dict(custom_combiners=[_count_rows_combiner()])
+        acct = pds.NaiveBudgetAccountant(1.0, 1e-6)
+        engine = pds.DPEngine(acct, noise_mode=noise_mode)
+        params = pds.AggregateParams(metrics=metrics, max_contributions=1,
+                                     **kw)
+        res = engine.aggregate(df, params,
+                               pds.DataFrameExtractors("pid", "pk", "v"),
+                               public_partitions=["g"])
+        acct.compute_budgets()
+        out = res.dataframe().collect()
+        assert len(out) == 1
+        return out[0][col]
+
+    @pytest.mark.parametrize("case", list(CASES))
+    def test_bounded_and_priced(self, spark, case):
+        want = self.CASES[case][2]
+        got = self._release(spark, case, "zero")
+        if case == "percentile":
+            # histogram percentiles are exact to one bin width
+            assert got == pytest.approx(want, abs=10.0 / 256)
+        else:
+            assert got == pytest.approx(want)
+        # the secure release prices M without raising
+        self._release(spark, case, "secure")

@@ -77,7 +77,12 @@ SMOKE = ["dp_count_public", "dp_sum_clip_per_partition",
          # sf0.01 compare)
          "dedup_exact_incremental", "stream_exact_store_mirror",
          "dedup_incremental", "stream_near_dup_store_mirror",
-         "doc_decontam_incremental", "multimodal_phash_incremental"]
+         "doc_decontam_incremental", "multimodal_phash_incremental",
+         # DP releases whose contribution bounding runs through the
+         # shared bound resolution and the row bounder
+         "dp_count_max_contributions", "dp_count_no_cross_bounding",
+         "dp_sum_clip_per_contribution", "dp_percentile_public",
+         "dp_vector_sum_public"]
 
 
 @pytest.fixture(scope="module")

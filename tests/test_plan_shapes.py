@@ -365,8 +365,11 @@ def test_scoped_conf_restores_on_exception_and_unset(spark):
 
 
 def test_limit_rows_per_key_parity(spark):
-    """Row-output oversize cap (vector/custom paths): identical rows to
-    the plain window under deterministic ordering, both regimes."""
+    """Row-output bounding (percentile/vector/custom/selection paths):
+    identical rows to the plain window under deterministic ordering, in
+    both cap regimes — Linf caps, the L0 key sample and the
+    per-privacy-id total cap, null-valued keys included."""
+    from pyspark.sql import Window
     from pipelinedp_spark import contribution_bounders as B
     rows = ([(1, "a", i) for i in range(2500)]
             + [(2, "a", i) for i in range(10)]
@@ -380,6 +383,42 @@ def test_limit_rows_per_key_parity(spark):
     # binding-regime cap (< threshold) delegates to the plain window
     small = B.limit_rows_per_key(df, ["pid", "pk"], 5, order).collect()
     assert len(small) == 15
+
+    def same(got, want):
+        assert sorted(map(str, got.collect())) == \
+            sorted(map(str, want.collect()))
+
+    keys = ["pid", "pk"]
+    order = [F.col("v"), F.col("pk")]
+    nulls = df.unionByName(spark.createDataFrame(
+        [(None, "a", i) for i in range(1500)]
+        + [(3, None, i) for i in range(1100)]
+        + [(4, "c", i) for i in range(5)], "pid int, pk string, v int"))
+    for cap in (1000, 5):   # generous and binding regime
+        got, _ = B.bound_rows(nulls, "pid", ["pk"], linf=cap,
+                              order_cols=order)
+        same(got, B._limit_per_key(nulls, keys, cap, order))
+        got, _ = B.bound_rows(nulls, "pid", ["pk"], total=cap,
+                              order_cols=order)
+        same(got, B._limit_per_key(nulls, ["pid"], cap, order))
+    # Linf + L0: rows are identical within a (pid, pk) group, so the Linf
+    # sample is deterministic under a key-only order, and the L0 sample
+    # keeps each pid's first two keys by pk. The equality semi-join that
+    # keeps the L0 sample drops rows with a null key.
+    grp = spark.createDataFrame(
+        [(1, "a", 0)] * 2500 + [(1, "b", 1)] * 10 + [(1, "c", 2)] * 1200
+        + [(2, None, 3)] * 1500 + [(2, "a", 0)] * 3
+        + [(None, "b", 1)] * 1100, "pid int, pk string, v int")
+    by_pk = [F.col("pk")]
+    first_keys = F.dense_rank().over(Window.partitionBy("pid").orderBy("pk"))
+    for cap in (1000, 5):
+        got, sampled = B.bound_rows(grp, "pid", ["pk"], l0=2, linf=cap,
+                                    order_cols=by_pk)
+        want = (B._limit_per_key(grp, keys, cap, by_pk)
+                .withColumn("__r__", first_keys)
+                .filter(F.col("__r__") <= 2).drop("__r__"))
+        same(got, want.dropna(subset=keys))
+        same(sampled, want.select(*keys).distinct())
 
 
 def test_hll_no_distinct_and_bounded_shuffle(spark):
